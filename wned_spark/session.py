@@ -14,7 +14,26 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def host_memory_bytes() -> int:
+    """Memory this process may use: physical RAM, or the cgroup (v2
+    ``memory.max`` / v1 ``memory.limit_in_bytes``) limit when lower."""
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                mem = min(mem, int(f.read().strip()))
+        except (OSError, ValueError):
+            pass  # no such cgroup file, or "max" (no limit)
+    return mem
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of
+    :func:`host_memory_bytes`, as a ``spark.driver.memory`` size."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{host_memory_bytes() // 2 // 2**20}m"
 
 
 def package_zip() -> str:
@@ -49,6 +68,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
+    Defaults come from the host: ``master`` is ``local[cores]`` with the
+    cores of this process's affinity mask (``SPARK_GRAFT_CPUS``
+    overrides), and the driver heap is half of the memory the process
+    may use (``SPARK_GRAFT_DRIVER_MEM`` overrides; see
+    :func:`default_driver_memory`). ``extra_conf`` wins over both.
+
     At cluster scale the same confs apply; only ``master`` and memory
     sizing change. ``spark.sql.shuffle.partitions`` defaults to the
     core count locally — on a real cluster set it to ~2-3x total cores
@@ -77,8 +102,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # local mode = driver-only: the heap serves all executor threads,
-        # so size it to the machine (32 concurrent tasks on 8g thrash GC)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # so it is sized to the host — half of RAM (or of the cgroup
+        # limit), leaving the rest to off-heap, Python workers and the OS;
+        # a heap above RAM lets G1 grow until the JVM dies on mmap
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
