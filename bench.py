@@ -24,15 +24,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
 
-    from wned_spark.session import get_spark
+    from wned_spark.session import DEFAULT_CPUS as cpus, get_spark
 
-    spark = get_spark(
-        app_name="wned_bench", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark(app_name="wned_bench")
 
     import wned_spark.entry_queries as EQ
     from wned_spark.config import ERConfig

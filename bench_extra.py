@@ -65,16 +65,13 @@ def build_queries(spark, sf_dir):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     reps = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
     mode = sys.argv[1] if len(sys.argv) > 1 else "list"
     names = sys.argv[2:]
 
-    from wned_spark.session import get_spark
+    from wned_spark.session import DEFAULT_CPUS as cpus, get_spark
 
-    spark = get_spark(
-        app_name="wned_bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark(app_name="wned_bench_extra")
     qs = build_queries(spark, sf_dir)
 
     if mode == "list":

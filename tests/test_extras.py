@@ -1,4 +1,4 @@
-"""Dedup / ANN / text / multimodal correctness tests (extras beyond the
+"""Dedup / ANN / text correctness tests (extras beyond the
 reference inventory, graded as first-class components)."""
 
 import numpy as np
@@ -7,19 +7,16 @@ import pytest
 from pyspark.sql import Row
 
 from wned_spark.functions import text as TX
-from wned_spark.operators import ann, dedup, multimodal
+from wned_spark.operators import ann, dedup
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
 
-@pytest.mark.parametrize("scheme", ["classic", "oph"])
-def test_minhash_recall_vs_exact_jaccard(spark, scheme):
+def test_minhash_recall_vs_exact_jaccard(spark):
     """Every pair with exact word-3gram Jaccard >= 0.5 must be found by
     MinHash-LSH at 16 bands x 2 rows (collision prob > 0.99 at J=0.5),
-    and reported Jaccards must agree exactly (verification is exact).
-    Runs on BOTH sketch kernels: classic independent permutations and
-    the one-permutation-hashing production default."""
+    and reported Jaccards must agree exactly (verification is exact)."""
     docs = spark.read.parquet(DOCS)
     exact = {
         (r["left_doc"], r["right_doc"]): r["jaccard"]
@@ -28,7 +25,7 @@ def test_minhash_recall_vs_exact_jaccard(spark, scheme):
     mh = {
         (r["left_doc"], r["right_doc"]): r["jaccard"]
         for r in dedup.minhash_duplicate_pairs(
-            docs, num_hashes=32, band_size=2, jaccard_threshold=0.5, scheme=scheme
+            docs, num_hashes=32, band_size=2, jaccard_threshold=0.5
         ).collect()
     }
     missed = set(exact) - set(mh)
@@ -194,30 +191,6 @@ def test_quality_score_orders_garbage_below_prose(spark):
     assert out[1] > out[2]
 
 
-def test_multimodal_features_deterministic_and_shaped(spark):
-    media = multimodal.synth_media(spark, 24)
-    f1 = multimodal.extract_features(media, feat_dim=8)
-    rows = f1.collect()
-    assert len(rows) == 24
-    for r in rows:
-        assert len(r["feature"]) == 8
-    f2 = {r["media_id"]: r["feature"] for r in multimodal.extract_features(media, feat_dim=8).collect()}
-    for r in rows:
-        assert f2[r["media_id"]] == r["feature"]
-
-
-def test_multimodal_resize_and_frames(spark):
-    media = multimodal.synth_media(spark, 24)
-    rs = multimodal.resize_images(media, out_w=16, out_h=8).collect()
-    assert all(len(r["payload"]) == 16 * 8 for r in rs)
-    frames = multimodal.sample_frames(media, every_ms=500)
-    j = frames.groupBy("media_id").agg(F.count("*").alias("n")).join(
-        media.filter("kind = 'video'").select("media_id", "duration_ms"), "media_id"
-    )
-    bad = j.filter(F.col("n") != F.floor(F.col("duration_ms") / 500) + 1)
-    assert bad.count() == 0
-
-
 def test_simhash_band_occupancy_bounded(spark):
     """64-bit default: band buckets must stay near-uniform — the
     100 TB guarantee is that the band self-join is near-linear, which
@@ -332,37 +305,6 @@ def test_ann_ivf_recall_and_determinism(spark):
     assert recall >= 0.9, recall
 
 
-def test_multimodal_features_short_and_empty_payloads(spark):
-    """Payloads shorter than feat_dim (and fully empty ones) must not
-    crash the vectorized reduceat kernel; empty chunks yield NaN — the
-    per-row np.array_split semantics (ADVICE r3 regression). NaN
-    surfaces as None through Arrow's list<float> conversion."""
-    rows = [
-        # 3-byte audio payload, feat_dim=8 → chunks 0..2 real, 3..7 NaN
-        Row(media_id=1, kind="audio", payload=bytes([10, 20, 30]), mime=None,
-            width=None, height=None, duration_ms=None),
-        # normal-length payload for contrast
-        Row(media_id=2, kind="audio", payload=bytes(range(64)), mime=None,
-            width=None, height=None, duration_ms=None),
-        # empty payload LAST in the batch (the reduceat IndexError case)
-        Row(media_id=3, kind="audio", payload=b"", mime=None,
-            width=None, height=None, duration_ms=None),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA).coalesce(1)
-    out = {r["media_id"]: r["feature"]
-           for r in multimodal.extract_features(media, feat_dim=8).collect()}
-    assert len(out) == 3
-    short = out[1]
-    assert [round(v) for v in short[:3]] == [10, 20, 30]
-    assert all(v is None for v in short[3:])
-    # media 2: pin EVERY chunk mean against np.array_split — a clamped
-    # reduceat silently truncated the LAST chunk's sum (59.5 → 51.625)
-    # whenever the batch ended in an empty payload
-    expected = [float(c.mean()) for c in np.array_split(np.arange(64), 8)]
-    assert out[2] == pytest.approx(expected, abs=1e-6)
-    assert all(v is None for v in out[3])
-
-
 def test_ivf_auto_centroids_scale_with_corpus(spark):
     """VERDICT r4 item #5: the DEFAULT centroid count must grow with
     the corpus so default cell occupancy stays ~target_cell at any n
@@ -400,18 +342,30 @@ def test_ann_ivf_empty_corpus(spark):
     assert set(out.columns) == {"query_id", "neighbor_id", "cosine", "rk"}
 
 
-def test_score_surface_pairs_duplicate_input_rows(spark):
-    """Duplicated (left, right) input rows must not multiply score rows
-    through the soft-tfidf join-back (ADVICE r3)."""
-    from wned_spark.operators.scoring import score_surface_pairs
+def test_soft_tfidf_feature_duplicate_input_rows(spark):
+    """Duplicated (left, right) input rows must yield one score row per
+    distinct pair, so a caller's left-join back never multiplies rows
+    (ADVICE r3). ``soft_tfidf_feature(assume_distinct=False)`` owns the
+    dedup; both kernels are checked: the UDF kernel below the size gate
+    and the relational kernel called directly."""
+    from wned_spark.operators.scoring import soft_tfidf_feature, soft_tfidf_scores
 
     pairs = spark.createDataFrame(
         [("jon smith", "john smith")] * 3 + [("acme corp", "acme corporation")] * 2,
         "left_norm string, right_norm string",
     )
-    out = score_surface_pairs(pairs)
-    assert out.count() == 2
-    assert out.select("left_norm", "right_norm").distinct().count() == 2
+    outs = [
+        soft_tfidf_feature(pairs, assume_distinct=False),
+        soft_tfidf_scores(pairs),
+    ]
+    scores = []
+    for out in outs:
+        rows = out.collect()
+        assert len(rows) == 2
+        scores.append({(r["left_norm"], r["right_norm"]): r["name_soft"] for r in rows})
+    assert scores[0].keys() == scores[1].keys()
+    for k, v in scores[0].items():
+        assert abs(v - scores[1][k]) < 1e-9, k
 
 
 def test_simhash_table_matches_column_spec(spark):
@@ -557,63 +511,3 @@ def test_word_shingles_zip_form_matches_slice_spec(spark):
         }
         assert got == want, n
 
-
-def test_oph_dense_tokens_matches_array_kernel(spark):
-    """r07 parity pin: the token-stream OPH kernel
-    (``_oph_dense_tokens`` — posexplode + lead-window shingles, one
-    exchange) must equal the array-input relational kernel
-    (``_oph_dense`` over ``word_shingles``) element-for-element on the
-    corpus plus adversarial rows: empty/whitespace/null text (the ['']
-    fallback), <n-token docs (whole token list as one shingle), and
-    duplicate shingles (distinct'd in the array path, harmless under
-    the per-bin min in the stream path)."""
-    edge = spark.createDataFrame(
-        [
-            (200001, ""),
-            (200002, " \t "),
-            (200003, None),
-            (200004, "one"),
-            (200005, "one two"),
-            (200006, "one two three"),
-            (200007, "a b a b a b a"),
-            (200008, "Dup, dup; DUP words... words repeated dup words"),
-        ],
-        "doc_id long, text string",
-    )
-    docs = spark.read.parquet(DOCS).select("doc_id", "text").unionByName(edge)
-    for k, n in ((32, 3), (16, 2)):
-        sh = docs.select(
-            F.col("doc_id").alias("doc"),
-            dedup.word_shingles(F.col("text"), n).alias("shingles"),
-        )
-        want = {
-            (r["doc"], r["bin"]): r["dv"]
-            for r in dedup._oph_dense(sh, k).collect()
-        }
-        got = {
-            (r["doc"], r["bin"]): r["dv"]
-            for r in dedup._oph_dense_tokens(docs, "doc_id", "text", k, n).collect()
-        }
-        assert got == want, (k, n)
-
-
-def test_minhash_oph_stream_scheme_matches_default(spark):
-    """The low-memory 'oph-stream' scheme must produce bit-identical
-    pairs to the default cached-array 'oph' scheme (same OPH bands by
-    the _oph_dense_tokens parity above; same exact-Jaccard verify)."""
-    docs = spark.read.parquet(DOCS)
-    for nh, bs, thr in ((32, 4, 0.2), (64, 1, 0.2)):
-        base = {
-            (r["left_doc"], r["right_doc"]): round(r["jaccard"], 9)
-            for r in dedup.minhash_duplicate_pairs(
-                docs, jaccard_threshold=thr, num_hashes=nh, band_size=bs
-            ).collect()
-        }
-        stream = {
-            (r["left_doc"], r["right_doc"]): round(r["jaccard"], 9)
-            for r in dedup.minhash_duplicate_pairs(
-                docs, jaccard_threshold=thr, num_hashes=nh, band_size=bs,
-                scheme="oph-stream",
-            ).collect()
-        }
-        assert stream == base, (nh, bs)

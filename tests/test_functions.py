@@ -314,57 +314,6 @@ def test_token_count_bpe_ish_pinned(spark):
     assert got == [2, 3, 7, 0]
 
 
-def test_monge_elkan_pinned(spark):
-    from wned_spark.functions.similarity import jaro_winkler, monge_elkan_udf
-
-    df = spark.createDataFrame(
-        [("alice gardenbar", "a gardenbar"), ("alice gardenbar", "alice gardenbar"),
-         ("xx", "yy"), ("", "abc")],
-        "a string, b string",
-    )
-    got = [r["m"] for r in df.select(monge_elkan_udf("a", "b").alias("m")).collect()]
-    # directional mean-of-max with inner JW
-    exp0 = (max(jaro_winkler("alice", t) for t in ["a", "gardenbar"])
-            + max(jaro_winkler("gardenbar", t) for t in ["a", "gardenbar"])) / 2
-    assert abs(got[0] - exp0) < 1e-12
-    assert got[1] == 1.0
-    assert got[2] < 0.5
-    assert got[3] == 0.0
-
-
-def test_lcs_longest_substring_pinned(spark):
-    from wned_spark.functions.similarity import lcs_longest_substring_udf
-
-    df = spark.createDataFrame(
-        [("gardenbar", "gardnbar"), ("abc", "abc"), ("abc", "xyz"), ("", "abc")],
-        "a string, b string",
-    )
-    got = [r["n"] for r in df.select(lcs_longest_substring_udf("a", "b").alias("n")).collect()]
-    # "gardenbar" vs "gardnbar": longest common substring "nbar" (4)
-    assert got == [4, 3, 0, 0]
-
-
-def test_substring_tfidf_overlapping_count(spark):
-    from wned_spark.functions.similarity import (
-        substring_count_overlapping, substring_tfidf,
-    )
-
-    df = spark.createDataFrame(
-        [("aaa banana Anna", "aa"), ("banana", "ana"), ("no hit here", "zz"),
-         ("Case INSENSITIVE case", "case")],
-        "content string, name string",
-    )
-    got = [r["c"] for r in df.select(
-        substring_count_overlapping(F.col("content"), F.col("name")).alias("c")
-    ).collect()]
-    # "aaa" has overlapping "aa" twice; "banana" has "ana" twice (overlap)
-    assert got == [2, 2, 0, 2]
-    tf = df.select(substring_tfidf(F.col("content"), F.col("name"), F.lit(2.0)).alias("t")).collect()
-    import math
-    assert abs(tf[0]["t"] - math.sqrt(2) * 2.0) < 1e-12
-    assert tf[2]["t"] == 0.0
-
-
 def test_oph_signature_estimates_jaccard_and_is_not_collapsed(spark):
     """One-permutation hashing: (a) for two shingle sets with known
     Jaccard, the fraction of agreeing DENSIFIED bins ≈ J (the OPH
@@ -468,9 +417,9 @@ def test_oph_relational_matches_column_spec(spark):
 
 
 def test_oph_bands_floor_non_divisible(spark):
-    """With num_hashes not divisible by band_size, the oph scheme must
+    """With num_hashes not divisible by band_size, the OPH bands must
     drop the leftover bins — floor(num_hashes/band_size) full bands,
-    exactly like the classic kernels — not emit a short high-collision
+    exactly like the column kernels — not emit a short high-collision
     band."""
     from wned_spark.operators.dedup import _oph_bands
 

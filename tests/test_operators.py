@@ -300,3 +300,39 @@ def test_soft_tfidf_relational_matches_udf(spark):
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
+
+
+def test_soft_tfidf_initial_rule_is_directional(spark):
+    """Initial expansion runs from the initial's side only: a
+    single-letter token matches a token with the same first letter, but
+    a full token never matches the other surface's initial. The
+    symmetric rule let the surname "vergarbar" match the first-name
+    initial of "v. barbarbar" (sim 1.0), which carried a cross-entity
+    match edge past the gate. Pinned on both kernels."""
+    from pyspark.sql import functions as F
+
+    from wned_spark.config import ERConfig
+    from wned_spark.operators.scoring import make_soft_tfidf_udf, soft_tfidf_scores
+
+    pairs = spark.createDataFrame(
+        [("vergarbar", "v. barbarbar"), ("q.", "quinn"), ("q. zhu", "quinn zhu")],
+        "left_norm string, right_norm string",
+    )
+    udf = make_soft_tfidf_udf(pairs, theta=0.90)
+    kernels = {
+        "udf": {
+            (r["left_norm"], r["right_norm"]): r["v"]
+            for r in pairs.select(
+                "left_norm", "right_norm",
+                udf(F.col("left_norm"), F.col("right_norm")).alias("v"),
+            ).collect()
+        },
+        "relational": {
+            (r["left_norm"], r["right_norm"]): r["name_soft"]
+            for r in soft_tfidf_scores(pairs, theta=0.90).collect()
+        },
+    }
+    for name, got in kernels.items():
+        assert got[("vergarbar", "v. barbarbar")] < ERConfig().soft_gate, (name, got)
+        assert got[("q.", "quinn")] == 1.0, (name, got)
+        assert got[("q. zhu", "quinn zhu")] == 1.0, (name, got)

@@ -3,8 +3,10 @@ text-equality invariant, and catalog resume semantics."""
 
 import json
 import os
+import threading
 
 import pyspark.sql.functions as F
+import pytest
 
 from wned_spark.config import ERConfig
 from wned_spark.datagen import generate_corpus
@@ -12,7 +14,59 @@ from wned_spark.pipeline import run_er_pipeline
 from wned_spark.plans.catalog import Catalog
 
 
-def test_e2e_pairwise_f1_gate(spark):
+def _record_cancels(monkeypatch, spark) -> list:
+    """Record every ``cancelJobGroup`` call (and still make it)."""
+    sc = spark.sparkContext
+    calls: list = []
+    real = sc.cancelJobGroup
+
+    def cancel(group):
+        calls.append(group)
+        real(group)
+
+    monkeypatch.setattr(sc, "cancelJobGroup", cancel)
+    return calls
+
+
+def _contingency_prf(clusters, gold_mentions) -> dict:
+    """Pairwise P/R/F1 over ALL gold mention pairs, counted linearly
+    from the cluster x entity table: with n_ij the mentions of cluster
+    i and entity j, tp = sum C(n_ij, 2), predicted pairs and gold pairs
+    are the same sum over the row and the column totals. A gold
+    mention with no cluster counts as a singleton."""
+    gold = gold_mentions.select(
+        F.xxhash64("conv_id", "turn_idx", "start").alias("mention_id"), "entity_id"
+    ).distinct()
+    cells = (
+        gold.join(clusters.select("mention_id", "cluster_id"), "mention_id", "left")
+        .select(
+            F.coalesce(
+                F.col("cluster_id").cast("string"),
+                F.concat(F.lit("missing:"), F.col("mention_id").cast("string")),
+            ).alias("cluster"),
+            "entity_id",
+        )
+        .groupBy("cluster", "entity_id")
+        .count()
+        .collect()
+    )
+    rows: dict = {}
+    cols: dict = {}
+    tp = 0
+    for r in cells:
+        n = r["count"]
+        tp += n * (n - 1) // 2
+        rows[r["cluster"]] = rows.get(r["cluster"], 0) + n
+        cols[r["entity_id"]] = cols.get(r["entity_id"], 0) + n
+    pred = sum(n * (n - 1) // 2 for n in rows.values())
+    true = sum(n * (n - 1) // 2 for n in cols.values())
+    p = tp / pred if pred else 1.0
+    r = tp / true if true else 1.0
+    return {"precision": p, "recall": r, "f1": 2 * p * r / (p + r) if p + r else 0.0}
+
+
+def test_e2e_pairwise_f1_gate(spark, monkeypatch):
+    cancels = _record_cancels(monkeypatch, spark)
     c = generate_corpus(spark, n_conversations=40, turns_per_conv=10,
                         n_entities=32, community_size=8)
     c["transcripts"] = c["transcripts"].cache()
@@ -22,6 +76,9 @@ def test_e2e_pairwise_f1_gate(spark):
         gold_mentions=c["gold_mentions"], cfg=ERConfig(),
     )
     assert res.metrics["f1"] >= 0.99, res.metrics
+    # every hub-pool stage resolved, so the pool's job group is left
+    # alone (cancelling a group with no active jobs logs a warning)
+    assert cancels == []
     # four-feature parity with WNED (utils/Feature.java:20-38):
     # nameSim block, semSim (cosine + ZeroKL), local, prior
     for col in ["name_jw", "name_soft", "sig_cosine", "sig_kl",
@@ -122,3 +179,48 @@ def test_e2e_adversarial_regime_gate(spark):
         cfg=dataclasses.replace(ERConfig(), use_pattern_defs=False),
     )
     assert res_off.metrics["f1"] < 0.99, res_off.metrics
+
+
+def test_e2e_contingency_f1_seed1(spark):
+    """Contingency F1 over all gold mention pairs on generator seed 1,
+    where the symmetric SoftTFIDF initial rule merged "Vera Barbarbar"
+    with "Xenia Vergarbar" (F1 0.985). The blocked-pair metric of
+    ``run_er_pipeline`` cannot see a merge across blocks; this count
+    can."""
+    c = generate_corpus(spark, n_conversations=400, turns_per_conv=12,
+                        n_entities=64, community_size=8, seed=1)
+    c["transcripts"] = c["transcripts"].cache()
+    res = run_er_pipeline(spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig())
+    prf = _contingency_prf(res.clusters, c["gold_mentions"])
+    assert prf["f1"] >= 0.99, prf
+    c["transcripts"].unpersist()
+
+
+def test_hub_pool_cancelled_when_main_thread_fails(spark, monkeypatch):
+    """A stage on the main thread raises while a hub-pool stage is still
+    running: the pool's job group must be cancelled so the worker's
+    Spark jobs do not outlive the call."""
+    from wned_spark.operators import blocking, graph
+
+    cancels = _record_cancels(monkeypatch, spark)
+    release = threading.Event()
+    started = threading.Event()
+
+    def blocked_edges(mentions, cfg):
+        started.set()
+        release.wait(120)
+        return mentions.sparkSession.range(1)
+
+    def failing_surfaces(mentions):
+        assert started.wait(120)
+        raise RuntimeError("surface stage failed")
+
+    monkeypatch.setattr(graph, "build_cooccurrence_edges", blocked_edges)
+    monkeypatch.setattr(blocking, "surfaces_of", failing_surfaces)
+    c = generate_corpus(spark, n_conversations=4, turns_per_conv=4, n_entities=8)
+    try:
+        with pytest.raises(RuntimeError, match="surface stage failed"):
+            run_er_pipeline(spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig())
+        assert cancels == ["wned-hub-pool"]
+    finally:
+        release.set()

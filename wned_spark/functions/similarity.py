@@ -173,53 +173,6 @@ def make_zero_kl_udf(eps: float = 1e-6, gamma: float = 10.0):
 zero_kl_divergence_udf = make_zero_kl_udf()
 
 
-# ---------------------------------------------------------------- R5
-@F.pandas_udf(T.DoubleType())
-def monge_elkan_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Monge-Elkan (StringSim.java:105-108, secondstring semantics):
-    directional mean over tokens of s of the best inner Jaro-Winkler
-    match in t. Arrow-batched; short name strings only."""
-    out = np.empty(len(a), dtype=np.float64)
-    for i in range(len(a)):
-        x, y = a.iloc[i], b.iloc[i]
-        if not isinstance(x, str) or not isinstance(y, str) or not x or not y:
-            out[i] = 0.0
-            continue
-        ta, tb = x.split(), y.split()
-        if not ta or not tb:
-            out[i] = 0.0
-            continue
-        out[i] = sum(max(jaro_winkler(u, v) for v in tb) for u in ta) / len(ta)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.IntegerType())
-def lcs_longest_substring_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Longest common SUBSTRING length — exactly the reference's
-    ``lcs_distance`` (StringSim.java:136-160: raw max run length,
-    despite its docstring claiming normalization). DP over short name
-    strings, Arrow-batched."""
-    out = np.empty(len(a), dtype=np.int32)
-    for i in range(len(a)):
-        s, t = a.iloc[i], b.iloc[i]
-        if not isinstance(s, str) or not isinstance(t, str) or not s or not t:
-            out[i] = 0
-            continue
-        prev = [0] * (len(t) + 1)
-        best = 0
-        for ci in range(1, len(s) + 1):
-            cur = [0] * (len(t) + 1)
-            cs = s[ci - 1]
-            for cj in range(1, len(t) + 1):
-                if cs == t[cj - 1]:
-                    cur[cj] = prev[cj - 1] + 1
-                    if cur[cj] > best:
-                        best = cur[cj]
-            prev = cur
-        out[i] = best
-    return pd.Series(out)
-
-
 # ---------------------------------------------------------------- R10
 def extract_abbrev(definition: str, use_cap: bool) -> str:
     """Abbreviation of a name: concatenated uppercase chars per token;
@@ -288,26 +241,6 @@ def abbrev_sim_udf(name: pd.Series, definition: pd.Series) -> pd.Series:
         x, y = name.iloc[i], definition.iloc[i]
         out[i] = abbrev_sim(x, y) if isinstance(x, str) and isinstance(y, str) else 0.0
     return pd.Series(out)
-
-
-# ---------------------------------------------------------------- R16
-def substring_count_overlapping(content: Column, name: Column) -> Column:
-    """Overlapping case-insensitive occurrence count of ``name`` inside
-    ``content`` — the indexOf(+1) loop of ``DocumentUtils.java:146-160``
-    as one JVM regexp (zero-width lookahead counts overlaps). Returns 0
-    for empty names."""
-    quoted = F.concat(F.lit("(?=\\Q"), F.lower(name), F.lit("\\E)"))
-    return F.when(F.length(name) == 0, F.lit(0)).otherwise(
-        F.regexp_count(F.lower(content), quoted)
-    )
-
-
-def substring_tfidf(content: Column, name: Column, idf: Column) -> Column:
-    """R16: repeated-substring tf-idf (``DocumentUtils.java:146-162``):
-    sqrt(overlapping occurrence count) * idf(name), 0 when absent —
-    the Lucene DefaultSimilarity tf the reference's TFIDF3x applies."""
-    freq = substring_count_overlapping(content, name)
-    return F.when(freq == 0, F.lit(0.0)).otherwise(F.sqrt(freq) * idf)
 
 
 # ---------------------------------------------------------------- R13

@@ -93,28 +93,6 @@ def _plane_sign(seed: int):
     ).otherwise(F.lit(-1.0))
 
 
-def _rp_bucket(vec_col, planes: int = 8):
-    """Random-projection sign bucket from pinned xxhash64 hyperplanes —
-    deterministic across runs/parallelism (no driver RNG)."""
-    d = F.size(vec_col)
-    bits = []
-    for p in range(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.transform(F.sequence(F.lit(0), d - 1), _plane_sign(p * 131071)),
-                lambda x, s: x.cast("double") * s,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(1 << p))
-    out = bits[0]
-    for x in bits[1:]:
-        out = out + x
-    return out
-
-
 def cosine_topk_lsh(
     queries: DataFrame,
     corpus: DataFrame,

@@ -18,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wned_spark.functions.shingles import minhash_band_keys_direct
 from wned_spark.operators.cc import connected_components
 
 
@@ -168,6 +167,8 @@ def _oph_dense(sh: DataFrame, num_hashes: int) -> DataFrame:
     the input, not the hash rows) and takes the same per-bin constant
     fallback as the spec kernel, so empty docs band deterministically
     and only with each other."""
+    from pyspark.sql import Window
+
     from wned_spark.functions.shingles import _OPH_SEED
 
     k = num_hashes
@@ -177,79 +178,8 @@ def _oph_dense(sh: DataFrame, num_hashes: int) -> DataFrame:
     binmin = hs.groupBy(
         "doc", F.pmod("h", F.lit(k)).alias("bin")
     ).agg(F.min("h").alias("v"))
-    grid = sh.select("doc").distinct()
-    return _oph_densify_grid(grid, binmin, k)
-
-
-def _oph_dense_tokens(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc, bin, dv) — :func:`_oph_dense` computed from a token STREAM
-    instead of materialized shingle arrays (r07, guide §2.3/§2.4).
-
-    The array path pays to build, cache and explode a per-doc string
-    array whose construction runs through interpreted ``zip_with``
-    lambdas. Here the cleaned token array is exploded once with its
-    position and the n-gram at position i is assembled by ``lead()``
-    window probes over (doc, pos) — ``concat_ws`` skips the nulls past
-    the end, which reproduces ``word_shingles``' short-document rule
-    (a <n-token doc emits its whole token list as one shingle), and the
-    ``pos <= greatest(sz-n, 0)`` filter reproduces its index range. An
-    empty/whitespace/null text takes the same ``['']`` fallback before
-    the explode, so such docs still band together. Duplicate shingles
-    (removed by ``array_distinct`` in the array path) are harmless
-    here: OPH takes a per-bin ``min`` and duplicate shingle hashes
-    cannot change a min.
-
-    Plan shape: after one hash repartition by ``id_col`` every step —
-    posexplode, the lead window, the bin-min groupBy, the densify
-    windows and the band groupBy — is clustered by ``doc``, so the
-    WHOLE sketch chain runs with a single exchange (verified in
-    plans/r07/dedup_minhash_lsh_after.txt). Parity vs the array path is
-    pinned element-for-element in tests/test_extras.py."""
-    from pyspark.sql import Window
-
-    from wned_spark.functions.shingles import _OPH_SEED
-
-    k = num_hashes
-    raw = F.array_remove(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), "")
-    toks = F.when(F.size(raw) > 0, raw).otherwise(F.array(F.lit("")))
-    td = docs.select(F.col(id_col).alias("doc"), toks.alias("toks")).select(
-        "doc", F.size("toks").alias("sz"), F.posexplode("toks").alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc").orderBy("pos")
-    parts = [F.col("tok")] + [
-        F.lead("tok", j).over(w) for j in range(1, shingle_n)
-    ]
-    hs = (
-        td.select(
-            "doc",
-            "pos",
-            "sz",
-            F.concat_ws(" ", *parts).alias("s"),
-        )
-        .filter(F.col("pos") <= F.greatest(F.col("sz") - shingle_n, F.lit(0)))
-        .select("doc", F.xxhash64("s", F.lit(_OPH_SEED)).alias("h"))
-    )
-    binmin = hs.groupBy(
-        "doc", F.pmod("h", F.lit(k)).alias("bin")
-    ).agg(F.min("h").alias("v"))
-    grid = docs.select(F.col(id_col).alias("doc")).distinct()
-    return _oph_densify_grid(grid, binmin, k)
-
-
-def _oph_densify_grid(grid: DataFrame, binmin: DataFrame, num_hashes: int) -> DataFrame:
-    """Shared densification tail of the OPH kernels: (doc) grid ×
-    [0,k) bins, left-joined with the bin minima, then exact rotation
-    densification with two window passes."""
-    from pyspark.sql import Window
-
-    k = num_hashes
-    grid = grid.select(
+    # (doc) grid × [0,k) bins, left-joined with the bin minima
+    grid = sh.select("doc").distinct().select(
         "doc", F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("bin")
     )
     g = grid.join(binmin, ["doc", "bin"], "left")
@@ -292,20 +222,11 @@ def _oph_bands(
     sh: DataFrame, num_hashes: int, band_size: int
 ) -> DataFrame:
     """(doc, band) LSH keys over :func:`_oph_dense` values. The band
-    count is floored exactly like the classic kernels
+    count is floored exactly like the column kernels
     (``minhash_band_keys*``): leftover bins beyond n_bands*band_size
-    are dropped, never emitted as a short (higher-collision) band, so
-    'oph' and 'classic' schemes stay comparable at any
-    (num_hashes, band_size)."""
-    return _bands_from_dense(_oph_dense(sh, num_hashes), num_hashes, band_size)
-
-
-def _bands_from_dense(
-    dense: DataFrame, num_hashes: int, band_size: int
-) -> DataFrame:
-    """(doc, band) keys from a (doc, bin, dv) dense grid — shared band
-    packing of the array-input and token-stream OPH kernels."""
+    are dropped, never emitted as a short (higher-collision) band."""
     n_bands = num_hashes // band_size
+    dense = _oph_dense(sh, num_hashes)
     return dense.filter(F.col("bin") < n_bands * band_size).groupBy(
         "doc", (F.col("bin") / band_size).cast("int").alias("bandidx")
     ).agg(
@@ -327,82 +248,24 @@ def minhash_duplicate_pairs(
     num_hashes: int = 32,
     band_size: int = 4,
     jaccard_threshold: float = 0.5,
-    scheme: str = "oph",
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: shingle → minhash → band → bucket
     self-join → exact-Jaccard verification of colliding pairs only.
 
-    ``scheme='oph'`` (default) sketches with one-permutation hashing —
-    ONE string hash per shingle instead of ``num_hashes``
-    (:func:`oph_signature`), a ~``num_hashes``× cut of the dominant
-    sketch cost; ``scheme='classic'`` keeps the independent-permutation
-    kernel as the parity/oracle reference; ``scheme='oph-stream'``
-    computes the SAME oph bands from a token stream
-    (:func:`_oph_dense_tokens` — posexplode + lead-window n-grams, one
-    exchange, no per-doc arrays anywhere) with candidate-only verify —
-    bit-identical output (parity-pinned), kept as the LOW-MEMORY
-    variant for corpora of large documents where caching every doc's
-    shingle array is the binding constraint. On this benchmark's
-    ~300-char docs a same-session alternating duel put the cached-array
-    default at 3.3-4.2 s vs 5.4-7.3 s for the stream form at the 10×
-    scale, so the array form stays the default. All schemes verify
-    candidates with EXACT Jaccard, so they differ only in
-    recall/candidate profile (oph ≡ oph-stream even there), never in
-    reported pair truth."""
+    Sketches with one-permutation hashing — ONE string hash per
+    shingle instead of ``num_hashes`` (:func:`_oph_bands`), a
+    ~``num_hashes``× cut of the dominant sketch cost. Candidates are
+    verified with EXACT Jaccard, so the sketch decides only the
+    recall/candidate profile, never the reported pair truth."""
     # spread the sketch stage across all cores: a small-SF corpus often
     # arrives as ONE parquet file → one task doing every string hash.
     # Repartition the raw docs (text bytes, pre-shingle) by id so the
     # shingle+hash work parallelizes; at cluster scale the input is
     # already many partitions and this becomes a cheap no-op-ish
     # exchange that also balances skewed input files.
-    # (deliberately NOT localCheckpointed: a LogicalRDD reports
-    # UnknownPartitioning, so pinning here would forfeit the
-    # hash-by-doc partitioning the stream kernel's no-extra-exchange
-    # plan rests on — re-measured: the pinned variant re-shuffles the
-    # full token stream.)
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par, F.col(id_col))
-
-    if scheme == "oph-stream":
-        sig = _bands_from_dense(
-            _oph_dense_tokens(docs, id_col, text_col, num_hashes, shingle_n),
-            num_hashes,
-            band_size,
-        ).localCheckpoint(eager=False)
-        a, b = sig.alias("a"), sig.alias("b")
-        cand_ids = (
-            a.join(b, "band")
-            .filter(F.col("a.doc") < F.col("b.doc"))
-            .select(
-                F.col("a.doc").alias("left_doc"),
-                F.col("b.doc").alias("right_doc"),
-            )
-            .distinct()
-            # spread: AQE coalesces the byte-light pair list to ~1
-            # partition, which would run the interpreted HOF verify
-            # single-threaded (guide §2.5)
-            .repartition(par)
-        )
-        cand = (
-            cand_ids.join(
-                docs.select(F.col(id_col).alias("left_doc"), F.col(text_col).alias("_tl")),
-                "left_doc",
-            )
-            .join(
-                docs.select(F.col(id_col).alias("right_doc"), F.col(text_col).alias("_tr")),
-                "right_doc",
-            )
-            .withColumn("sh_l", word_shingles(F.col("_tl"), shingle_n))
-            .withColumn("sh_r", word_shingles(F.col("_tr"), shingle_n))
-        )
-        inter = F.size(F.array_intersect("sh_l", "sh_r"))
-        union = F.size("sh_l") + F.size("sh_r") - inter
-        return (
-            cand.withColumn("jaccard", F.when(union == 0, 1.0).otherwise(inter / union))
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("left_doc", "right_doc", "jaccard")
-        )
 
     sh = docs.select(
         F.col(id_col).alias("doc"),
@@ -411,22 +274,13 @@ def minhash_duplicate_pairs(
     sh = sh.persist()
     try:
         # band keys only — the (possibly large) shingle arrays do NOT ride
-        # the self-join shuffle; they join back per DISTINCT candidate pair
-        if scheme == "oph":
-            sig = _oph_bands(sh, num_hashes, band_size)
-        else:
-            sig = sh.select(
-                "doc",
-                F.explode(
-                    minhash_band_keys_direct(F.col("shingles"), num_hashes, band_size)
-                ).alias("band"),
-            )
-        # materialize the (doc, band) keys ONCE before the self-join
+        # the self-join shuffle; they join back per DISTINCT candidate pair.
+        # The (doc, band) keys are materialized ONCE before the self-join
         # (r07, guide §2.4): both join branches of an unmaterialized
         # frame re-derive its whole lineage, so the sketch chain
         # (explode → hash → bin-min → densify windows → band groupBy)
         # ran twice per call; the key table is two longs per row
-        sig = sig.localCheckpoint(eager=False)
+        sig = _oph_bands(sh, num_hashes, band_size).localCheckpoint(eager=False)
         a, b = sig.alias("a"), sig.alias("b")
         cand_ids = (
             a.join(b, "band")

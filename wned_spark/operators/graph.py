@@ -76,15 +76,6 @@ def build_cooccurrence_edges(
     )
 
 
-def vertices_of(mentions: DataFrame) -> DataFrame:
-    key_col = "canon_norm" if "canon_norm" in mentions.columns else "surface_norm"
-    return (
-        mentions.select(F.col(key_col).alias("name"))
-        .distinct()
-        .select(node_id(F.col("name")).alias("nid"), "name")
-    )
-
-
 def degrees(edges: DataFrame) -> DataFrame:
     """A10: out-degree per node, materialized once
     (DirectedGraph.java:147-170)."""

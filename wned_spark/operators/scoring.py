@@ -34,37 +34,6 @@ from wned_spark.functions.similarity import (
 )
 
 
-def score_surface_pairs(surface_pairs: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
-    """(left_norm, right_norm) distinct pairs → string features.
-
-    Levenshtein + Dice stay JVM-side; Jaro-Winkler is the one
-    Arrow-batched pandas UDF (R3 has no Catalyst builtin). SoftTFIDF —
-    THE discriminative name feature (Cohen et al.; the reference ships
-    it too, StringSim.java:105-160): IDF-weighted directional token
-    alignment with a JW>=theta inner gate and initial-expansion ("q."
-    matches "quinn") — is computed by the RELATIONAL kernel
-    (:func:`soft_tfidf_scores`), whose UDF work is one JW call per
-    distinct token-type pair corpus-wide, independent of partitioning
-    and executor count.
-
-    The input is explicitly repartitioned to 2× core count for the
-    full-surface JW UDF: AQE sizes reducer counts by BYTES, and a
-    name-pair table is only a few MB per million rows while the JW
-    kernel is CPU-heavy — byte-sized partitioning caps this stage at
-    ~10-way regardless of cluster size. Explicit core-count
-    partitioning is exempt from AQE coalescing, so the UDF stage
-    scales with the executor count.
-    """
-    # one score row per distinct pair, whatever the caller sends: the
-    # left-join back (soft is distinct) must never multiply rows
-    surface_pairs = surface_pairs.select("left_norm", "right_norm").distinct()
-    soft = soft_tfidf_feature(surface_pairs, cfg, assume_distinct=True)
-    feats = string_features(surface_pairs, cfg)
-    return feats.join(soft, ["left_norm", "right_norm"], "left").na.fill(
-        {"name_soft": 0.0}
-    )
-
-
 def string_features(surface_pairs: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
     """R2/R3/R4/R15 per-pair string features over DISTINCT
     (left_norm, right_norm) rows: Jaro-Winkler (the one Python-UDF
@@ -126,7 +95,8 @@ def soft_tfidf_feature(
     count — ``limit(gate+1).count()`` answers "are there at least
     ``gate`` distinct pairs" without scanning past the gate.
     ``assume_distinct=True`` skips the dedup pass when the caller
-    already guarantees one row per pair (score_surface_pairs does)."""
+    already guarantees one row per pair (the pipeline's blocked pairs
+    are distinct by construction)."""
     pairs = (
         surface_pairs
         if assume_distinct
@@ -152,9 +122,11 @@ def soft_tfidf_scores(
     soft(A,B) = max over directions of
         sum_{t in A, best(t,B) >= theta} idf(t) * best(t, B)
         / sum_{t in A} idf(t)
-    with best(t,B) = max over b in B of JW(t,b); single-letter tokens
-    match any token sharing their first letter (initial expansion,
-    R10-lite); idf(t) = ln(1 + N/df(t)), df over distinct surfaces.
+    with best(t,B) = max over b in B of JW(t,b); a single-letter token
+    t matches any b sharing its first letter (initial expansion,
+    R10-lite), while a longer t never matches a single-letter b — the
+    rule runs from the initial's side only; idf(t) = ln(1 + N/df(t)),
+    df over distinct surfaces.
 
     SCALE DESIGN — this replaced an Arrow-batched per-pair UDF with a
     per-worker (token, token) JW memo. The memo version anti-scaled:
@@ -333,9 +305,12 @@ def soft_tfidf_scores(
     # addends are unchanged, so scores equal the two-pass form (pinned
     # against the UDF kernel in tests/test_operators.py).
     tp_all = tp_l.union(_expand("right_norm", "left_norm", 1))
+    # the initial rule is directional: a full A token never aligns with
+    # a single-letter B token (a surname must not match the other
+    # name's first-name initial)
     sims_sym = sims.union(
         sims.select(F.col("tok_b").alias("tok_a"), F.col("tok_a").alias("tok_b"), "sim")
-    )
+    ).filter((F.length("tok_a") == 1) | (F.length("tok_b") > 1))
     matched = tp_all.join(sims_sym, ["tok_a", "tok_b"])
     best = matched.groupBy("left_norm", "right_norm", "dir", "pos_a", "tok_a").agg(
         F.max("sim").alias("best")
@@ -396,8 +371,9 @@ def make_soft_tfidf_udf(
     soft(A,B) = max over directions of
         sum_{t in A, best_jw(t,B) >= theta} idf(t) * best_jw(t, B)
         / sum_{t in A} idf(t)
-    Single-letter tokens match any token sharing their first letter
-    (initial expansion, R10-lite). idf(t) = ln(1 + N/df(t)) with df =
+    A single-letter token of A matches any token of B sharing its
+    first letter (initial expansion, R10-lite); a longer A token never
+    matches a single-letter B token. idf(t) = ln(1 + N/df(t)) with df =
     number of distinct surfaces containing t.
 
     THE DRIVER PULL IS BOUNDED: only the ``max_vocab`` highest-df
@@ -458,8 +434,10 @@ def make_soft_tfidf_udf(
             den += w
             best = 0.0
             for b in tb:
-                if len(t) == 1 or len(b) == 1:
-                    sim = 1.0 if (t and b and t[0] == b[0]) else 0.0
+                if len(t) == 1:
+                    sim = 1.0 if t[0] == b[0] else 0.0
+                elif len(b) == 1:
+                    sim = 0.0
                 else:
                     sim = _jw(t, b)
                 if sim > best:
@@ -481,33 +459,6 @@ def make_soft_tfidf_udf(
         return pd.Series(out)
 
     return soft_tfidf
-
-
-def shared_prior_feature(pairs: DataFrame, candidates: DataFrame) -> DataFrame:
-    """prior feature per mention pair: max over common candidate
-    entities of min(prior_l, prior_r); 0 when no shared candidate."""
-    cl = candidates.select(
-        F.col("mention_id").alias("left_id"),
-        "entity_id",
-        F.col("prior").alias("prior_l"),
-    )
-    cr = candidates.select(
-        F.col("mention_id").alias("right_id"),
-        "entity_id",
-        F.col("prior").alias("prior_r"),
-    )
-    shared = (
-        pairs.select("left_id", "right_id")
-        .join(cl, "left_id")
-        .join(cr, ["right_id", "entity_id"])
-        .groupBy("left_id", "right_id")
-        .agg(F.max(F.least("prior_l", "prior_r")).alias("shared_prior"))
-    )
-    return (
-        pairs.select("left_id", "right_id")
-        .join(shared, ["left_id", "right_id"], "left")
-        .na.fill({"shared_prior": 0.0})
-    )
 
 
 def sum_normalize_per_group(

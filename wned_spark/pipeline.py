@@ -75,11 +75,6 @@ def run_er_pipeline(
     """Run the full ER pipeline. With a ``catalog``, every stage is a
     committed resumable snapshot; without, stages persist in memory."""
 
-    import os
-    import time as _time
-
-    timing = os.environ.get("WNED_STAGE_TIMING") == "1"
-
     def stage(name: str, fn, ckpt: bool = True, **kw) -> DataFrame:
         if catalog is not None:
             return catalog.run_stage(name, fn, **kw)
@@ -102,17 +97,8 @@ def run_er_pipeline(
         # CONCURRENTLY across cores. Their plans stay shallow because
         # every input they read is already a checkpointed hub.
         # (Catalog mode truncates naturally: parquet snapshots.)
-        t0 = _time.time()
         d = fn()
-        d = d.localCheckpoint(eager=False) if ckpt else d.persist()
-        if timing:
-            t1 = _time.time()
-            n = d.count()
-            print(
-                f"[stage] {name}: build={t1-t0:.1f}s mat={_time.time()-t1:.1f}s rows={n}",
-                flush=True,
-            )
-        return d
+        return d.localCheckpoint(eager=False) if ckpt else d.persist()
 
     # ---- CONCURRENT independent hub chains ----
     # cooccur_edges, the ctx-tfidf weight table, and the alias-dict
@@ -140,8 +126,10 @@ def run_er_pipeline(
     # worker THREAD itself may briefly outlive the call while its
     # cancelled job raises, but it submits nothing further. On the
     # happy path every future is already resolved, so shutdown is
-    # instant and the group cancel is a no-op.
+    # instant and the group is not cancelled (Spark warns when asked to
+    # cancel a group with no active jobs).
     _JOB_GROUP = "wned-hub-pool"
+    _futures = []
     try:
         def _submit(name: str, fn, ckpt: bool = True):
             """Run a stage on a worker thread (materialized on return);
@@ -160,6 +148,7 @@ def run_er_pipeline(
                 return d
 
             fut = _pool.submit(_build)
+            _futures.append(fut)
             return fut.result
 
         # ---- mention extraction + doc-local coref + W8 expansion
@@ -529,7 +518,9 @@ def run_er_pipeline(
         )
     finally:
         if _pool is not None:
+            # read before shutdown, which marks queued futures done
+            pending = any(not f.done() for f in _futures)
             _pool.shutdown(wait=False, cancel_futures=True)
-            # kill any worker stage still executing (no-op when all
-            # futures resolved — completed jobs are not in the group)
-            spark.sparkContext.cancelJobGroup(_JOB_GROUP)
+            # kill any worker stage still executing
+            if pending:
+                spark.sparkContext.cancelJobGroup(_JOB_GROUP)
