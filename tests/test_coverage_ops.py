@@ -1,9 +1,6 @@
 """Pinned tests for the long-tail operators: A6 per-group feature
 normalization, N4 offset reconciliation, F2 entity-type filter,
-U3 candidate-set merge, R14 signature renormalization."""
-
-import pyspark.sql.functions as F
-from pyspark.sql import Row
+U3 candidate-set merge."""
 
 from wned_spark.config import ERConfig
 
@@ -95,21 +92,3 @@ def test_u3_merge_applies_prior_floor(spark):
     cfg = dataclasses.replace(ERConfig(), prior_floor=0.01)
     out = merge_candidate_sets([a], cfg=cfg)
     assert [r["entity_id"] for r in out.collect()] == [10]
-
-
-def test_r14_renormalize_signatures(spark):
-    from wned_spark.operators.ppr import renormalize_signatures
-
-    sigs = spark.createDataFrame(
-        [
-            Row(seed=1, node=10, rank=0.5), Row(seed=1, node=11, rank=0.5),  # mass 1.0
-            Row(seed=2, node=10, rank=0.4), Row(seed=2, node=11, rank=0.4),  # mass 0.8
-        ]
-    )
-    out = renormalize_signatures(sigs, tol=1e-4)
-    got = {(r["seed"], r["node"]): r["rank"] for r in out.collect()}
-    assert got[(1, 10)] == 0.5 and got[(1, 11)] == 0.5  # untouched
-    assert abs(got[(2, 10)] - 0.5) < 1e-12 and abs(got[(2, 11)] - 0.5) < 1e-12
-    mass = out.groupBy("seed").agg(F.sum("rank").alias("m")).collect()
-    for r in mass:
-        assert abs(r["m"] - 1.0) < 1e-9

@@ -9,20 +9,30 @@ from pyspark.sql import Row
 
 from wned_spark.config import ERConfig
 from wned_spark.operators.cc import connected_components
-from wned_spark.operators.ppr import personalized_pagerank, signature_cosine
+from wned_spark.operators.ppr import (
+    indicator_preference,
+    personalized_pagerank,
+    personalized_pagerank_auto,
+    personalized_pagerank_broadcast,
+    signature_cosine,
+)
 
 
-def _numpy_ppr(edges, seeds, n_nodes, alpha=0.85, iters=3):
-    """Oracle replicating the exact update rule:
-    r' = alpha * P^T r + e_seed * ((1-alpha) + alpha * dangling_mass)."""
+def _numpy_ppr(edges, prefs, n_nodes, alpha=0.85, iters=3):
+    """Oracle replicating the exact update rule, for preference vectors
+    ``prefs = {seed: {node: w}}`` (w sum-normalized per seed):
+    r' = alpha * P^T r + pref * ((1-alpha) + alpha * dangling_mass)."""
     P = np.zeros((n_nodes, n_nodes))
     for s, d, w in edges:
         P[s, d] = w
     row_sums = P.sum(axis=1)
     out = {}
-    for seed in seeds:
-        r = np.zeros(n_nodes)
-        r[seed] = 1.0
+    for seed, pv in prefs.items():
+        pref = np.zeros(n_nodes)
+        for node, w in pv.items():
+            pref[node] += w
+        pref /= pref.sum()
+        r = pref.copy()
         for _ in range(iters):
             spread = np.zeros(n_nodes)
             dangling = 0.0
@@ -31,8 +41,7 @@ def _numpy_ppr(edges, seeds, n_nodes, alpha=0.85, iters=3):
                     spread += alpha * r[s] * P[s] / row_sums[s]
                 else:
                     dangling += r[s]
-            spread[seed] += (1 - alpha) + alpha * dangling
-            r = spread
+            r = spread + pref * ((1 - alpha) + alpha * dangling)
         out[seed] = r
     return out
 
@@ -54,8 +63,8 @@ def test_ppr_matches_numpy_oracle(spark):
     )
     seeds = spark.createDataFrame([Row(seed=0), Row(seed=5), Row(seed=11)])
     cfg = ERConfig(ppr_max_iter=3)
-    got = personalized_pagerank(seeds, edges, cfg, check_delta=False).collect()
-    oracle = _numpy_ppr(edge_list, [0, 5, 11], n)
+    got = personalized_pagerank(indicator_preference(seeds), edges, cfg).collect()
+    oracle = _numpy_ppr(edge_list, {s: {s: 1.0} for s in (0, 5, 11)}, n)
     for r in got:
         assert abs(r["rank"] - oracle[r["seed"]][r["node"]]) < 1e-9, (r, oracle[r["seed"]][r["node"]])
     # mass conservation: each signature sums to 1
@@ -124,9 +133,7 @@ def test_connected_components_min_id_convention(spark):
 def test_ppr_broadcast_matches_join_based(spark):
     """The broadcast-graph PPR must agree with the join-based variant
     (and thus the numpy oracle) on random graphs, including dangling
-    and isolated seeds."""
-    from wned_spark.operators.ppr import personalized_pagerank_broadcast
-
+    and isolated indicator seeds."""
     rng = random.Random(9)
     n = 20
     edge_list = []
@@ -141,11 +148,12 @@ def test_ppr_broadcast_matches_join_based(spark):
         [Row(src=s, dst=d, weight=w) for s, d, w in edge_list]
     )
     seeds = spark.createDataFrame([Row(seed=i) for i in [0, 3, 19, 77]])  # 77 isolated
+    pref = indicator_preference(seeds)
     cfg = ERConfig(ppr_max_iter=3)
     ref = {(r["seed"], r["node"]): r["rank"]
-           for r in personalized_pagerank(seeds, edges, cfg, check_delta=False).collect()}
+           for r in personalized_pagerank(pref, edges, cfg).collect()}
     got = {(r["seed"], r["node"]): r["rank"]
-           for r in personalized_pagerank_broadcast(seeds, edges, cfg).collect()}
+           for r in personalized_pagerank_broadcast(pref, edges, cfg).collect()}
     # broadcast variant treats a dangling SEED as a fixed point at
     # itself, which equals the strongly-preferential stationary rule
     # for a node with no out-edges
@@ -321,44 +329,58 @@ def test_expand_subgraph_with_keep_connected_fallback(spark):
 
 
 def test_pref_ppr_broadcast_matches_join_based(spark):
-    """G6 broadcast path ≡ join-based preference PPR, including a
-    preference node absent from the graph (pure-dangling holder)."""
-    from wned_spark.operators.ppr import (
-        personalized_pagerank_pref, personalized_pagerank_pref_broadcast,
-    )
-
+    """The CSR kernel ≡ the join kernel ≡ the numpy oracle on the one
+    input shape (seed, node, w): indicator seeds, a dangling seed, a
+    seed absent from the graph, a duplicated (seed, node) row and a
+    preference node absent from the graph (pure-dangling holder). Two
+    rows per Arrow batch, so a seed's rows straddle batches inside the
+    CSR kernel's partition."""
     rng = random.Random(11)
+    n = 12
     und = set()
     while len(und) < 25:
-        a, b = rng.randrange(12), rng.randrange(12)
+        a, b = rng.randrange(n - 1), rng.randrange(n - 1)
         if a != b:
             und.add((min(a, b), max(a, b)))
     rows = [(a, b, float(1 + rng.randrange(3))) for a, b in und]
-    edges = spark.createDataFrame(
-        rows + [(b, a, w) for a, b, w in rows], "src long, dst long, weight double"
-    )
-    pref = spark.createDataFrame(
-        [
-            (100, 0, 1.0), (100, 3, 1.0), (100, 7, 2.0),
-            (200, 5, 1.0), (200, 999, 1.0),  # 999 absent from the graph
-        ],
-        "seed long, node long, w double",
-    )
+    rows += [(b, a, w) for a, b, w in rows] + [(0, n - 1, 2.0)]  # n-1 dangling
+    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    pref_rows = [
+        (0, 0, 1.0), (3, 3, 1.0),  # indicator seeds
+        (n - 1, n - 1, 1.0),  # dangling seed
+        (30, 30, 1.0),  # seed absent from the graph
+        (100, 0, 1.0), (100, 3, 1.0), (100, 7, 2.0), (100, 3, 0.5),  # dup (100, 3)
+        (200, 5, 1.0), (200, 25, 1.0),  # 25 absent from the graph
+    ]
+    pref = spark.createDataFrame(pref_rows, "seed long, node long, w double")
+    prefs = {}
+    for seed, node, w in pref_rows:
+        prefs.setdefault(seed, {})
+        prefs[seed][node] = prefs[seed].get(node, 0.0) + w
+    oracle = _numpy_ppr(rows, prefs, 32)
     cfg = ERConfig()
-    a = {
-        (r["seed"], r["node"]): r["rank"]
-        for r in personalized_pagerank_pref(pref, edges, cfg).collect()
-    }
-    b = {
-        (r["seed"], r["node"]): r["rank"]
-        for r in personalized_pagerank_pref_broadcast(pref, edges, cfg).collect()
-    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        a = {
+            (r["seed"], r["node"]): r["rank"]
+            for r in personalized_pagerank(pref, edges, cfg).collect()
+        }
+        b_rows = personalized_pagerank_broadcast(pref, edges, cfg).collect()
+    finally:
+        spark.conf.set(key, prev)
+    b = {(r["seed"], r["node"]): r["rank"] for r in b_rows}
+    assert len(b) == len(b_rows)  # one row per (seed, node)
     assert set(a) == set(b)
+    assert {s for s, _n in a} == set(prefs)
     for k in a:
         assert abs(a[k] - b[k]) < 1e-9, k
-    # mass conservation per seed
-    for seed in (100, 200):
-        assert abs(sum(v for (s, _n), v in a.items() if s == seed) - 1.0) < 1e-6
+        assert abs(a[k] - oracle[k[0]][k[1]]) < 1e-9, k
+    for seed in prefs:
+        assert abs(sum(v for (s, _n), v in a.items() if s == seed) - 1.0) < 1e-9
+    # a seed whose walk cannot leave it is the fixed point {seed: 1.0}
+    assert b[(n - 1, n - 1)] == b[(30, 30)] == 1.0
 
 
 def test_connected_components_auto_matches_distributed(spark):
@@ -377,17 +399,12 @@ def test_connected_components_auto_matches_distributed(spark):
 
 
 def test_ppr_auto_matches_join_on_g3_graph(spark):
-    """r07: the g3 registry row routes through the size-gated
-    ``personalized_pagerank_auto``. Pin the broadcast-CSR branch against
-    the join-based iteration on the EXACT registry graph (the nation
-    co-membership clique — identical at every SF) at the row's own
-    rounding (9 dp), as full row-set equality."""
-    from pyspark.sql import functions as F
-
-    from wned_spark.operators.ppr import (
-        personalized_pagerank,
-        personalized_pagerank_auto,
-    )
+    """The g3 registry row routes through ``personalized_pagerank_auto``.
+    Pin its broadcast-CSR branch (default gate) against its join branch
+    (``ppr_broadcast_max_edges=0``) on the EXACT registry graph (the
+    nation co-membership clique — identical at every SF) with the row's
+    own config and rounding (9 dp), as full row-set equality."""
+    import dataclasses
 
     n = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     a, b = n.alias("a"), n.alias("b")
@@ -405,13 +422,40 @@ def test_ppr_auto_matches_join_on_g3_graph(spark):
         .agg(F.min("n_nationkey").cast("long").alias("seed"))
         .select("seed")
     )
-    cfg = ERConfig(ppr_max_iter=3)
+    pref = indicator_preference(seeds)
+    cfg = ERConfig(ppr_max_iter=3, ppr_max_degree=None)
 
     def rows(df):
         return {
             (r["seed"], r["node"]): round(r["rank"], 9) for r in df.collect()
         }
 
-    ref = rows(personalized_pagerank(seeds, edges, cfg, check_delta=False))
-    got = rows(personalized_pagerank_auto(seeds, edges, cfg, check_delta=False))
+    got = rows(personalized_pagerank_auto(pref, edges, cfg))
+    ref = rows(personalized_pagerank_auto(
+        pref, edges, dataclasses.replace(cfg, ppr_broadcast_max_edges=0)
+    ))
+    assert len(got) == 25
     assert got == ref
+
+
+def test_ppr_auto_leaves_caller_edges_cached(spark):
+    """``edges`` belongs to the caller: a cache the caller made must
+    survive the call on either branch of the size gate, through the
+    evaluation of the lazily returned signatures."""
+    import dataclasses
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 1, 1.0), (2, 3, 1.0), (3, 2, 1.0)],
+        "src long, dst long, weight double",
+    ).persist()
+    pref = indicator_preference(spark.createDataFrame([(1,), (3,)], "seed long"))
+    try:
+        edges.count()
+        for gate in (10, 0):  # broadcast branch, then join branch
+            cfg = dataclasses.replace(ERConfig(), ppr_broadcast_max_edges=gate)
+            sigs = personalized_pagerank_auto(pref, edges, cfg)
+            assert edges.is_cached, gate
+            assert sigs.count() == 6, gate
+            assert edges.is_cached, gate
+    finally:
+        edges.unpersist()

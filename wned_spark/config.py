@@ -3,8 +3,10 @@
 Constants pinned to the reference where the semantics carry over
 (citations are file:line into /root/reference):
 
-- PPR: alpha=0.85, max 3 iterations, L1 delta < 1e-5
-  (``graph/algorithms/PersonalizedPageRank.java:27-30``).
+- PPR: alpha=0.85, 3 iterations
+  (``graph/algorithms/PersonalizedPageRank.java:27-30``; the reference
+  also stops at an L1 delta < 1e-5, which 3 iterations reach first in
+  practice, so no delta check runs).
 - Candidate caps: top-20 by prior, prior thresholds 0.005 (link source)
   / 0.001 (other), post-merge floor 2e-5
   (``cs/CandidateSelectionLucene.java:38,42``, ``utils/CSUtils.java:34,190``).
@@ -55,12 +57,6 @@ class ERConfig:
     # --- PPR semantic signatures (G3/G5) ---
     ppr_alpha: float = 0.85
     ppr_max_iter: int = 3
-    ppr_tol: float = 1e-5
-    # the reference stops at min(L1 delta < 1e-5, 3 iterations) and 3
-    # iterations dominates in practice (WeightedPersonalizedPageRank.java:211-216);
-    # the delta check costs a full-outer join per iteration, so it is
-    # off by default and available for convergence tests
-    ppr_check_delta: bool = False
     # top-K outgoing edges per node kept in the transition matrix (F7
     # degree-threshold recast); None = unbounded
     ppr_max_degree: int | None = 32

@@ -1273,7 +1273,7 @@ def g3_personalized_pagerank(spark, sf_dir):
     seed per region. The oracle unrolls the identical power iteration
     in SQL — a true independent check of the iterative operator."""
     from wned_spark.config import ERConfig
-    from wned_spark.operators.ppr import personalized_pagerank_auto
+    from wned_spark.operators.ppr import indicator_preference, personalized_pagerank_auto
 
     n = _t(spark, sf_dir, "nation")
     a, b = n.alias("a"), n.alias("b")
@@ -1294,15 +1294,14 @@ def g3_personalized_pagerank(spark, sf_dir):
         .agg(F.min("n_nationkey").cast("long").alias("seed"))
         .select("seed")
     )
-    cfg = ERConfig(ppr_max_iter=3)
-    # r07: routed through the size-gated auto strategy (the g8 shape) —
-    # this 600-edge clique graph takes the broadcast-CSR kernel (one
+    # unbounded degree: the oracle row-normalizes over every out-edge
+    cfg = ERConfig(ppr_max_iter=3, ppr_max_degree=None)
+    # this 100-edge clique graph takes the broadcast-CSR kernel (one
     # Arrow collect + one shuffle-free mapInPandas job) instead of the
-    # join-based iteration's ~8 chained shuffles. Both variants are
-    # parity-pinned (tests/test_ppr_cc.py, incl. this exact graph at
-    # round-9), and the SQL oracle unrolling the power iteration is
-    # unchanged.
-    sigs = personalized_pagerank_auto(seeds, edges, cfg, check_delta=False)
+    # join-based iteration's ~8 chained shuffles; both kernels are
+    # parity-pinned on this exact graph (tests/test_ppr_cc.py), and the
+    # SQL oracle unrolling the power iteration is independent of both
+    sigs = personalized_pagerank_auto(indicator_preference(seeds), edges, cfg)
     return sigs.select(
         F.col("seed").cast("int").alias("seed"),
         F.col("node").cast("int").alias("node"),

@@ -123,64 +123,30 @@ def second_pass_overrides(
 def _second_pass_best_local(spark, edges, pref_tbl, trial_tbl, cfg):
     """Driver-numpy computation of the per-(conversation, surface)
     best representative — semantics identical to the distributed path:
-    conversation signatures via preference-vector PPR (duplicate nodes
-    aggregated, graph-absent nodes as pure-dangling virtual indices),
-    representative signatures via single-seed PPR (isolated seeds fix
-    at themselves), cosine over shared nodes, argmax gated on
-    cosine > 0 with (desc cosine, asc entity_id) tiebreak."""
+    conversation and representative signatures from the same per-seed
+    walks the CSR kernel runs on executors (``ppr._ppr_walks``), cosine
+    over shared nodes, argmax gated on cosine > 0 with (desc cosine,
+    asc entity_id) tiebreak."""
     import numpy as np
 
-    from wned_spark.operators import ppr
-
     csr = ppr._csr_collect(edges, cfg.ppr_max_degree)
-    n_, _indptr, _dst, _p, has_out, rev = csr
-    alpha, iters = cfg.ppr_alpha, cfg.ppr_max_iter
-
-    sigs: dict = {}
-
-    def _store(key, idx, val, virt_map=None):
-        # map dense indices back to original node ids
-        nodes = np.where(
-            idx < n_,
-            rev[np.minimum(idx, n_ - 1)],
-            np.array([virt_map.get(int(i), -1) for i in idx]) if virt_map else -1,
-        )
-        order = np.argsort(nodes)
-        sigs[key] = (nodes[order], val[order])
-
-    # conversation signatures (preference-vector PPR)
-    p_seed = pref_tbl.column("seed").to_numpy().astype(np.int64, copy=False)
-    p_node = pref_tbl.column("node").to_numpy().astype(np.int64, copy=False)
-    p_w = pref_tbl.column("w").to_numpy().astype(np.float64, copy=False)
-    for seed in np.unique(p_seed):
-        m_ = p_seed == seed
-        nodes, inv0 = np.unique(p_node[m_], return_inverse=True)
-        w = np.bincount(inv0, weights=p_w[m_])
-        w = w / w.sum()
-        pos = np.searchsorted(rev, nodes)
-        pos_safe = np.minimum(pos, n_ - 1)
-        present = (pos < n_) & (rev[pos_safe] == nodes)
-        pidx = np.where(present, pos_safe, n_ + np.arange(len(nodes)))
-        virt_map = {int(n_ + k): int(nodes[k]) for k in range(len(nodes))}
-        idx, val = ppr._ppr_sparse(csr, pidx.astype(np.int64), w, alpha, iters)
-        _store(int(seed), idx, val, virt_map)
-
-    # representative signatures (single-seed PPR)
     t_conv = trial_tbl.column("conv_id").to_pylist()
     t_seed = trial_tbl.column("seed_a").to_numpy().astype(np.int64, copy=False)
     t_sid = trial_tbl.column("sid").to_numpy().astype(np.int64, copy=False)
     t_ent = trial_tbl.column("entity_id").to_numpy().astype(np.int64, copy=False)
     t_rep = trial_tbl.column("rep_sid").to_numpy().astype(np.int64, copy=False)
-    for rep in np.unique(t_rep):
-        pos = int(np.searchsorted(rev, rep))
-        six = pos if pos < n_ and rev[pos] == rep else None
-        if six is None or not has_out[six]:
-            sigs[int(rep)] = (np.array([rep], dtype=np.int64), np.array([1.0]))
-            continue
-        idx, val = ppr._ppr_sparse(
-            csr, np.array([six], dtype=np.int64), np.array([1.0]), alpha, iters
-        )
-        _store(int(rep), idx, val)
+
+    # conversation preference rows + one indicator row per representative
+    reps = np.unique(t_rep)
+    seed = np.concatenate([pref_tbl.column("seed").to_numpy(), reps]).astype(np.int64)
+    node = np.concatenate([pref_tbl.column("node").to_numpy(), reps]).astype(np.int64)
+    w = np.concatenate([pref_tbl.column("w").to_numpy(), np.ones(len(reps))])
+    sigs: dict = {}
+    for s, nodes, ranks in ppr._ppr_walks(
+        csr, seed, node, w, cfg.ppr_alpha, cfg.ppr_max_iter
+    ):
+        order = np.argsort(nodes)
+        sigs[s] = (nodes[order], ranks[order])
 
     def _cos(a, b):
         ia, va = sigs.get(a, (np.empty(0, np.int64), np.empty(0)))
@@ -227,106 +193,69 @@ def _second_pass_body(
         F.xxhash64("conv_id").alias("seed"), F.col("sid").alias("node"), F.lit(1.0).alias("w")
     )
 
-    if n_edges is None:
-        n_edges = edges.count()
-
-    # DRIVER FAST PATH: the ambiguous slice is usually dictionary-sized
-    # (tens of conversations × a handful of surfaces), yet the
-    # distributed plan costs ~12 small stages (two mapInPandas PPR
-    # chains, a union, a three-way cosine join, two windows) — ~15 s of
-    # pure stage orchestration for a 17-row override table at 720k
-    # turns. When the graph fits the broadcast cap AND the preference/
-    # trial tables are small, compute `best` entirely in numpy with the
-    # SAME kernels the executors run (_csr_collect + _ppr_sparse) —
-    # parity-pinned against the distributed path.
-    cap = cfg.second_pass_local_max_rows
-    if cap > 0 and n_edges <= cfg.ppr_broadcast_max_edges:
-        trial_small = (
-            amb_mentions.join(
-                cands.join(amb, "sid", "left_semi").select("sid", "entity_id"), "sid"
-            )
-            .join(reps, "entity_id")
-            .select("conv_id", "sid", "entity_id", "rep_sid")
-            .distinct()
-            .withColumn("seed_a", F.xxhash64("conv_id"))
-        )
-        # the size gate must run BEFORE any collect: limit(cap+1).count()
-        # is one cheap bounded job, so a multi-million-row preference/
-        # trial table is never shipped to the driver just to be rejected
-        if (
-            preference.limit(cap + 1).count() <= cap
-            and trial_small.limit(cap + 1).count() <= cap
-        ):
-            pref_tbl = preference.toArrow()
-            trial_tbl = trial_small.toArrow()
-            best = _second_pass_best_local(
-                amb_mentions.sparkSession, edges, pref_tbl, trial_tbl, cfg
-            )
-            return (
-                amb_mentions.join(best, ["conv_id", "sid"])
-                .join(
-                    surface_clusters.select(F.col("sid").alias("rep_sid"), "cluster_id"),
-                    "rep_sid",
-                )
-                .select("mention_id", "cluster_id")
-            )
-
-    # one batched PPR for the conversation preference vectors, one for
-    # the representative indicator seeds (both tiny seed sets); same
-    # broadcast-vs-join gate as the main pipeline — the broadcast CSR
-    # path runs each walk shuffle-free, which matters here because the
-    # join-based variant costs ~3 barriered shuffles per iteration on a
-    # side-pipeline that is usually tiny
-    rep_seeds = reps.select(F.col("rep_sid").alias("seed")).distinct()
-    if n_edges <= cfg.ppr_broadcast_max_edges:
-        # ONE shared CSR broadcast: both walks read the same transition
-        # matrix; building it twice doubles the normalize+collect cost
-        bc = ppr._csr_broadcast(edges, cfg.ppr_max_degree)
-        conv_sigs = ppr.personalized_pagerank_pref_broadcast(
-            preference, edges, cfg, max_degree=cfg.ppr_max_degree, csr_bc=bc
-        )
-        rep_sigs = ppr.personalized_pagerank_broadcast(
-            rep_seeds, edges, cfg, max_degree=cfg.ppr_max_degree, csr_bc=bc
-        )
-    else:
-        conv_sigs = ppr.personalized_pagerank_pref(
-            preference, edges, cfg, max_degree=cfg.ppr_max_degree
-        )
-        rep_sigs = ppr.personalized_pagerank(
-            rep_seeds, edges, cfg, check_delta=False, symmetric=True,
-            max_degree=cfg.ppr_max_degree,
-        )
-    sigs = conv_sigs.union(rep_sigs.select("seed", "node", "rank"))
-
     # candidate (conversation, entity-rep) pairs per ambiguous mention
-    cand_ents = cands.join(amb, "sid", "left_semi").select("sid", "entity_id")
     trial = (
-        amb_mentions.join(cand_ents, "sid")
+        amb_mentions.join(
+            cands.join(amb, "sid", "left_semi").select("sid", "entity_id"), "sid"
+        )
         .join(reps, "entity_id")
         .select("conv_id", "sid", "entity_id", "rep_sid")
         .distinct()
         .withColumn("seed_a", F.xxhash64("conv_id"))
     )
-    cos = ppr.signature_cosine(
-        trial.select(F.col("seed_a"), F.col("rep_sid").alias("seed_b")).distinct(),
-        sigs,
-    )
-    scored = trial.join(
-        cos,
-        (trial["seed_a"] == cos["seed_a"]) & (trial["rep_sid"] == cos["seed_b"]),
-    ).select("conv_id", "sid", "entity_id", "rep_sid", "sig_cosine")
+    if n_edges is None:
+        n_edges = edges.count()
 
-    # argmax candidate per (conversation, ambiguous surface); zero
-    # similarity everywhere -> no override (no signal)
-    w = Window.partitionBy("conv_id", "sid").orderBy(
-        F.desc("sig_cosine"), F.asc("entity_id")
-    )
-    best = (
-        scored.filter(F.col("sig_cosine") > 0)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("conv_id", "sid", "rep_sid")
-    )
+    # DRIVER FAST PATH: the ambiguous slice is usually dictionary-sized
+    # (tens of conversations × a handful of surfaces), yet the
+    # distributed plan is a chain of small stages (the PPR batch, a
+    # three-way cosine join, two windows) — ~15 s of pure stage
+    # orchestration for a 17-row override table at 720k turns. When the
+    # graph fits the broadcast cap AND the preference/trial tables are
+    # small, compute `best` entirely in numpy with the SAME kernels the
+    # executors run (_csr_collect + _ppr_walks) — parity-pinned against
+    # the distributed path.
+    cap = cfg.second_pass_local_max_rows
+    # the size gate must run BEFORE any collect: limit(cap+1).count()
+    # is one cheap bounded job, so a multi-million-row preference/
+    # trial table is never shipped to the driver just to be rejected
+    if (
+        cap > 0
+        and n_edges <= cfg.ppr_broadcast_max_edges
+        and preference.limit(cap + 1).count() <= cap
+        and trial.limit(cap + 1).count() <= cap
+    ):
+        best = _second_pass_best_local(
+            amb_mentions.sparkSession, edges, preference.toArrow(), trial.toArrow(), cfg
+        )
+    else:
+        # ONE batched PPR over the conversation preference vectors and
+        # the representative indicator seeds: one transition-matrix
+        # build (one CSR collect below the size gate) serves both
+        rep_seeds = reps.select(F.col("rep_sid").alias("seed")).distinct()
+        sigs = ppr.personalized_pagerank_auto(
+            preference.union(ppr.indicator_preference(rep_seeds)), edges, cfg,
+            n_edges=n_edges,
+        )
+        cos = ppr.signature_cosine(
+            trial.select(F.col("seed_a"), F.col("rep_sid").alias("seed_b")).distinct(),
+            sigs,
+        )
+        scored = trial.join(
+            cos,
+            (trial["seed_a"] == cos["seed_a"]) & (trial["rep_sid"] == cos["seed_b"]),
+        ).select("conv_id", "sid", "entity_id", "rep_sid", "sig_cosine")
+        # argmax candidate per (conversation, ambiguous surface); zero
+        # similarity everywhere -> no override (no signal)
+        w = Window.partitionBy("conv_id", "sid").orderBy(
+            F.desc("sig_cosine"), F.asc("entity_id")
+        )
+        best = (
+            scored.filter(F.col("sig_cosine") > 0)
+            .withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") == 1)
+            .select("conv_id", "sid", "rep_sid")
+        )
     return (
         amb_mentions.join(best, ["conv_id", "sid"])
         .join(

@@ -2,25 +2,30 @@
 
 The reference computes one PPR per candidate entity, farmed out to 32
 threads over a shared in-heap WebGraph
-(``WeightedPersonalizedPageRank.java:42-110,233-266``). The Spark-native
-re-expression batches ALL seeds into one long-form DataFrame
-``ranks(seed, node, rank)`` and iterates a single
-join-aggregate (sparse matrix-matrix instead of 32x matrix-vector):
+(``WeightedPersonalizedPageRank.java:42-110,233-266``). Here every walk
+starts from a PREFERENCE VECTOR given as rows ``(seed, node, w)``: an
+entity's signature from the indicator row ``(s, s, 1.0)``
+(:func:`indicator_preference`), a document's from a vector uniform over
+its confident entities (``ELUtils.java:59-94``). Weights are
+sum-normalized per seed. All seeds run as one batch:
 
     ranks' = alpha * (ranks ⋈ P).groupBy(seed, dst).sum
-             + [node == seed] * ((1 - alpha) + alpha * dangling(seed))
+             + pref(seed) * ((1 - alpha) + alpha * dangling(seed))
 
-with ``localCheckpoint()`` per iteration to truncate lineage (the north
-rule's "checkpointed sparse matrix-vector joins"). Dangling mass is
-returned to the preference vector — ``stronglyPreferential=true``
-(``PersonalizedPageRank.java:30``).
+Dangling mass is returned to the preference vector —
+``stronglyPreferential=true`` (``PersonalizedPageRank.java:30``).
 
-Parameters pinned to the reference: alpha=0.85, stop at L1 delta < 1e-5
-or 3 iterations (``PersonalizedPageRank.java:27-30``).
+Parameters pinned to the reference: alpha=0.85 and 3 iterations
+(``PersonalizedPageRank.java:27-30``). The reference also stops early
+at an L1 delta < 1e-5; 3 iterations come first in practice, so the
+walk always runs exactly ``cfg.ppr_max_iter`` iterations.
 
-Scale notes: P is row-normalized ONCE and persisted; each iteration is
-one shuffle on (seed, dst); signatures stay sparse (3 iterations from a
-single seed reach a bounded neighborhood), so signature size is
+Callers use :func:`personalized_pagerank_auto`, which picks one of two
+kernels by edge count: the broadcast-CSR kernel
+(:func:`personalized_pagerank_broadcast`) or the join kernel
+(:func:`personalized_pagerank`, one shuffle-aggregate per iteration
+with ``localCheckpoint`` truncating lineage). Signatures stay sparse
+(3 iterations reach a bounded neighborhood), so their size is
 O(seeds x avg 3-hop neighborhood), never O(seeds x |V|).
 """
 
@@ -56,156 +61,228 @@ def normalize_transition(edges: DataFrame, max_degree: int | None = None) -> Dat
     )
 
 
-def personalized_pagerank(
-    seeds: DataFrame,
+def indicator_preference(seeds: DataFrame) -> DataFrame:
+    """(seed) → the indicator preference rows (seed, seed, 1.0) (G5)."""
+    return seeds.selectExpr("seed", "seed AS node", "1.0D AS w")
+
+
+def personalized_pagerank_auto(
+    preference: DataFrame,
     edges: DataFrame,
     cfg: ERConfig = ERConfig(),
-    check_delta: bool = True,
-    symmetric: bool = False,
-    max_degree: int | None = None,
+    n_edges: int | None = None,
 ) -> DataFrame:
-    """seeds: (seed) node ids — each seed gets its own indicator
-    preference vector (G5); edges: (src, dst, weight).
+    """Batched PPR, one walk per seed of ``preference`` (seed, node, w)
+    over ``edges`` (src, dst, weight); returns signatures
+    ``(seed, node, rank)``.
 
-    ``symmetric=True`` asserts every node reachable through an edge has
-    out-edges (true for mirrored undirected graphs): then the only
-    dangling mass is an ISOLATED seed, whose signature is the fixed
-    point {seed: 1.0} — handled once outside the loop, and the
-    per-iteration dangling scan + join disappear.
+    Up to ``cfg.ppr_broadcast_max_edges`` edges the transition matrix
+    is collected and broadcast as CSR arrays
+    (:func:`personalized_pagerank_broadcast`: one Arrow collect + one
+    shuffle-free mapInPandas job); above it, where the CSR no longer
+    fits the driver, the join-based power iteration runs
+    (:func:`personalized_pagerank`: ~2 shuffles per iteration). The two
+    kernels are parity-pinned in tests/test_ppr_cc.py. ``n_edges``
+    reuses a count the caller already has; otherwise one count job
+    decides. ``edges`` is read, never cached or released here — its
+    lifecycle stays with the caller."""
+    if n_edges is None:
+        n_edges = edges.count()
+    if n_edges <= cfg.ppr_broadcast_max_edges:
+        return personalized_pagerank_broadcast(preference, edges, cfg)
+    return personalized_pagerank(preference, edges, cfg)
 
-    Returns signatures ``(seed, node, rank)``.
-    """
+
+def personalized_pagerank(
+    preference: DataFrame, edges: DataFrame, cfg: ERConfig = ERConfig()
+) -> DataFrame:
+    """Join kernel: every seed's walk as one long-form DataFrame,
+    iterated as a single join-aggregate. ``w`` is sum-normalized per
+    seed (the R14 stochastic-vector guard), so duplicate (seed, node)
+    rows add up. The spread is a LEFT join: a rank on a node with no
+    out-edge (dangling, or absent from the graph) lands under a null
+    ``dst``, and that group is the seed's dangling mass, returned to its
+    preference vector. A seed whose preference has no out-edge at all
+    is therefore the fixed point of its own preference."""
     alpha = cfg.ppr_alpha
-    trans = normalize_transition(edges, max_degree=max_degree).persist()
-    out_nodes = trans.select("src").distinct()
-
-    live_seeds = seeds
-    isolated = None
-    if symmetric:
-        live_seeds = seeds.join(
-            out_nodes, seeds["seed"] == out_nodes["src"], "left_semi"
-        ).persist()
-        isolated = seeds.join(
-            out_nodes, seeds["seed"] == out_nodes["src"], "left_anti"
-        ).select("seed", F.col("seed").alias("node"), F.lit(1.0).alias("rank"))
-
+    trans = normalize_transition(edges, cfg.ppr_max_degree).persist()
+    wsum = preference.groupBy("seed").agg(F.sum("w").alias("wsum"))
+    pref = (
+        preference.join(wsum, "seed")
+        .select("seed", "node", (F.col("w") / F.col("wsum")).alias("w"))
+        .persist()
+    )
     # lazy checkpoints: lineage still truncates at materialization, but
     # no extra job barrier per iteration (3 fixed iterations keep the
     # un-truncated plan bounded anyway)
-    ranks = live_seeds.select(
-        F.col("seed"), F.col("seed").alias("node"), F.lit(1.0).alias("rank")
-    ).localCheckpoint(eager=False)
-
+    ranks = pref.select("seed", "node", F.col("w").alias("rank")).localCheckpoint(
+        eager=False
+    )
     for _ in range(cfg.ppr_max_iter):
-        prev = ranks
-        spread = (
-            ranks.join(trans, ranks["node"] == trans["src"])
+        moved = (
+            ranks.join(trans, ranks["node"] == trans["src"], "left")
             .groupBy("seed", "dst")
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("mass"))
-            .select("seed", F.col("dst").alias("node"), (alpha * F.col("mass")).alias("rank"))
+            .agg(F.sum(F.col("rank") * F.coalesce(F.col("p"), F.lit(1.0))).alias("mass"))
         )
-        if symmetric:
-            teleport = live_seeds.select(
-                "seed", F.col("seed").alias("node"), F.lit(1.0 - alpha).alias("rank")
-            )
-        else:
-            # dangling mass per seed: rank on nodes with no out-edges
-            dangling = (
-                ranks.join(out_nodes, ranks["node"] == out_nodes["src"], "left_anti")
-                .groupBy("seed")
-                .agg(F.sum("rank").alias("dmass"))
-            )
-            teleport = (
-                seeds.join(dangling, "seed", "left")
-                .na.fill({"dmass": 0.0})
-                .select(
-                    "seed",
-                    F.col("seed").alias("node"),
-                    ((1.0 - alpha) + alpha * F.col("dmass")).alias("rank"),
-                )
-            )
+        spread = moved.filter(F.col("dst").isNotNull()).select(
+            "seed", F.col("dst").alias("node"), (alpha * F.col("mass")).alias("rank")
+        )
+        dangling = moved.filter(F.col("dst").isNull()).select(
+            "seed", F.col("mass").alias("dmass")
+        )
+        teleport = pref.join(dangling, "seed", "left").select(
+            "seed",
+            "node",
+            (
+                F.col("w")
+                * ((1.0 - alpha) + alpha * F.coalesce(F.col("dmass"), F.lit(0.0)))
+            ).alias("rank"),
+        )
         ranks = (
             spread.union(teleport)
             .groupBy("seed", "node")
             .agg(F.sum("rank").alias("rank"))
             .localCheckpoint(eager=False)  # truncate lineage, no job barrier
         )
-        if check_delta:
-            delta = (
-                ranks.alias("n")
-                .join(prev.alias("p"), ["seed", "node"], "full")
-                .select(
-                    F.abs(
-                        F.coalesce(F.col("n.rank"), F.lit(0.0))
-                        - F.coalesce(F.col("p.rank"), F.lit(0.0))
-                    ).alias("d")
-                )
-                .agg(F.max("d"))
-                .first()[0]
-            )
-            if delta is not None and delta < cfg.ppr_tol:
-                break
-    # trans stays persisted: with lazy checkpoints nothing has
+    # trans and pref stay persisted: with lazy checkpoints nothing has
     # materialized yet — unpersisting here would force 3 recomputes of
-    # the row-normalization when the caller finally acts on the ranks
-    if isolated is not None:
-        ranks = ranks.union(isolated)
+    # them when the caller finally acts on the ranks
     return ranks
 
 
-def personalized_pagerank_auto(
-    seeds: DataFrame,
-    edges: DataFrame,
-    cfg: ERConfig = ERConfig(),
-    check_delta: bool = True,
-    max_degree: int | None = None,
-    local_threshold: int | None = None,
+def personalized_pagerank_broadcast(
+    preference: DataFrame, edges: DataFrame, cfg: ERConfig = ERConfig()
 ) -> DataFrame:
-    """PPR with a size-gated physical strategy (same output contract —
-    the shape :func:`cc.connected_components_auto` uses, r07): below
-    the edge threshold, the broadcast-CSR kernel
-    (:func:`personalized_pagerank_broadcast` — one Arrow collect + one
-    shuffle-free mapInPandas job); above it, the join-based power
-    iteration (~2 shuffles × iterations). The two variants are
-    parity-pinned against each other and the numpy oracle in
-    tests/test_ppr_cc.py; both apply the strongly-preferential dangling
-    rule, and a seed with no out-edges is the fixed point {seed: 1.0}
-    under either. For a 25-node registry graph the join variant's ~8
-    chained shuffles are pure job-barrier overhead — the gate is the
-    same decision AQE makes for broadcast-vs-shuffle joins, applied to
-    the iterative operator."""
-    if local_threshold is None:
-        local_threshold = cfg.ppr_broadcast_max_edges
-    e = edges.persist()
-    try:
-        if e.count() <= local_threshold:
-            return personalized_pagerank_broadcast(
-                seeds, e, cfg, max_degree=max_degree
-            )
-        return personalized_pagerank(
-            seeds, e, cfg, check_delta=check_delta, symmetric=False,
-            max_degree=max_degree,
-        )
-    finally:
-        e.unpersist()
+    """CSR kernel: same semantics as :func:`personalized_pagerank`,
+    computed by shipping the row-normalized transition matrix (CSR in
+    plain numpy arrays) to every executor and running each seed's walk
+    in numpy (:func:`_ppr_walks`) inside mapInPandas.
 
+    This is the reference's own architecture — one shared in-heap graph,
+    per-seed parallel walks (WeightedPersonalizedPageRank.java:233-266) —
+    with Spark distributing the seeds. It is the right plan whenever the
+    DICTIONARY graph fits executor memory (10^8 edges ~ 2.4 GB); zero
+    shuffles after the one hash-partitioning of the preference rows by
+    seed, so scaling is linear in cores.
 
-def renormalize_signatures(signatures: DataFrame, tol: float = 1e-4) -> DataFrame:
-    """R14: stochastic-vector guard (``utils/ELUtils.java:81-83``): a
-    signature whose total mass drifts from 1.0 beyond ``tol`` (numeric
-    loss, truncated fan-out) is renormalized; in-tolerance signatures
-    pass through bit-unchanged."""
-    mass = signatures.groupBy("seed").agg(F.sum("rank").alias("mass"))
-    return (
-        signatures.join(mass, "seed")
-        .select(
-            "seed",
-            "node",
-            F.when(F.abs(F.col("mass") - 1.0) <= tol, F.col("rank"))
-            .otherwise(F.col("rank") / F.col("mass"))
-            .alias("rank"),
-        )
+    Driver memory is bounded by the numpy CSR arrays alone (~28 bytes
+    per edge): the collect is Arrow-columnar (``toArrow`` → zero-copy
+    numpy views, no Python row objects) and node ids are looked up by
+    ``np.searchsorted`` over the sorted unique-id array — no Python dict
+    of node ids is ever built."""
+    import numpy as np
+    import pandas as pd
+
+    alpha, iters = cfg.ppr_alpha, cfg.ppr_max_iter
+    sc = preference.sparkSession.sparkContext
+    bc = sc.broadcast(_csr_collect(edges, cfg.ppr_max_degree))
+
+    def frame(buf):
+        return pd.DataFrame({
+            "seed": np.repeat([s for s, _n, _r in buf], [len(n) for _s, n, _r in buf]),
+            "node": np.concatenate([n for _s, n, _r in buf]),
+            "rank": np.concatenate([r for _s, _n, r in buf]),
+        })
+
+    def run(batches):
+        # the hash partitioning keeps a seed's rows in one partition,
+        # but they may straddle Arrow batches: gather the partition's
+        # preference rows first, then stream the signatures out
+        cols = [
+            (b["seed"].to_numpy(np.int64), b["node"].to_numpy(np.int64),
+             b["w"].to_numpy(np.float64))
+            for b in batches
+        ]
+        if not cols:
+            return
+        seed, node, w = (np.concatenate(c) for c in zip(*cols))
+        buf, rows = [], 0
+        for walk in _ppr_walks(bc.value, seed, node, w, alpha, iters):
+            buf.append(walk)
+            rows += len(walk[1])
+            if rows >= 65536:
+                yield frame(buf)
+                buf, rows = [], 0
+        if buf:
+            yield frame(buf)
+
+    # no column expressions here: each pyspark.sql.functions call costs
+    # py4j round trips on the driver, and run() converts dtypes itself
+    return preference.repartition(sc.defaultParallelism, "seed").mapInPandas(
+        run, schema="seed long, node long, rank double"
     )
+
+
+def _csr_collect(edges: DataFrame, max_degree: int | None):
+    """Row-normalize, Arrow-collect and CSR-pack the transition matrix
+    as driver numpy arrays: (n, indptr, dst, p, rev_ids). rev_ids is
+    sorted — both the dense→original map and the searchsorted lookup
+    table."""
+    import numpy as np
+
+    tarrow = normalize_transition(edges, max_degree=max_degree).toArrow()
+    raw_src = tarrow.column("src").to_numpy().astype(np.int64, copy=False)
+    raw_dst = tarrow.column("dst").to_numpy().astype(np.int64, copy=False)
+    p = tarrow.column("p").to_numpy().astype(np.float64, copy=False)
+    del tarrow
+    uniq = np.unique(np.concatenate([raw_src, raw_dst]))
+    n = len(uniq)
+    src = np.searchsorted(uniq, raw_src)
+    dst = np.searchsorted(uniq, raw_dst)
+    order = np.argsort(src, kind="stable")
+    src, dst, p = src[order], dst[order], p[order]
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.add.at(indptr, src + 1, 1)
+    indptr = np.cumsum(indptr)
+    return (n, indptr, dst, p, uniq)
+
+
+def _ppr_walks(csr, seed, node, w, alpha: float, iters: int):
+    """Yield ``(seed, nodes, ranks)`` for every seed of the flat
+    preference rows ``seed, node, w`` (any order; duplicate (seed, node)
+    rows add up), walking each seed's sparse power iteration against the
+    :func:`_csr_collect` arrays. ``w`` is sum-normalized per seed. A
+    preference node absent from the graph gets a virtual index >= n: a
+    pure-dangling receiver of its own teleport mass. The accumulator
+    stays sized by the frontier's nonzeros, never O(|V|)."""
+    import numpy as np
+
+    n_, indptr_, dst_, p_, rev_ = csr
+    order = np.argsort(seed, kind="stable")
+    seed, node, w = seed[order], node[order], w[order]
+    seeds, starts = np.unique(seed, return_index=True)
+    ends = np.append(starts[1:], len(seed))
+    for s, lo, hi in zip(seeds.tolist(), starts.tolist(), ends.tolist()):
+        nodes, inv = np.unique(node[lo:hi], return_inverse=True)
+        pval = np.bincount(inv, weights=w[lo:hi])
+        pval = pval / pval.sum()
+        pos = np.searchsorted(rev_, nodes)
+        present = pos < n_
+        present[present] = rev_[pos[present]] == nodes[present]
+        pidx = np.where(present, pos, n_ + np.arange(len(nodes)))
+        idx, val = pidx, pval
+        for _ in range(iters):
+            real = idx < n_
+            counts = np.zeros(len(idx), dtype=np.int64)
+            counts[real] = indptr_[idx[real] + 1] - indptr_[idx[real]]
+            dangling = float(val[counts == 0].sum())
+            teleport = pval * ((1.0 - alpha) + alpha * dangling)
+            nz = counts > 0
+            if not nz.any():
+                idx, val = pidx, teleport
+                continue
+            lens = counts[nz]
+            ends_ = np.cumsum(lens)
+            flat = np.arange(ends_[-1]) + np.repeat(indptr_[idx[nz]] - ends_ + lens, lens)
+            idx, inv = np.unique(np.append(dst_[flat], pidx), return_inverse=True)
+            val = np.bincount(
+                inv, weights=np.append(np.repeat(val[nz], lens) * p_[flat] * alpha, teleport)
+            )
+        real = idx < n_
+        out = np.empty(len(idx), dtype=np.int64)
+        out[real] = rev_[idx[real]]
+        out[~real] = nodes[idx[~real] - n_]
+        yield s, out, val
 
 
 def signature_cosine(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
@@ -246,66 +323,6 @@ def signature_cosine(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
             cosine_expr(F.col("dot"), F.col("norm_a"), F.col("norm_b")).alias("sig_cosine"),
         )
     )
-
-
-def personalized_pagerank_pref(
-    preference: DataFrame,
-    edges: DataFrame,
-    cfg: ERConfig = ERConfig(),
-    max_degree: int | None = None,
-) -> DataFrame:
-    """G6: batched PPR from arbitrary per-seed PREFERENCE VECTORS —
-    the document-signature case (``ELUtils.java:59-94``: one walk per
-    document, preference uniform over its confident entities; here one
-    seed per conversation over its confident surface nodes).
-
-    preference: (seed, node, w); w is sum-normalized per seed here.
-    Strongly preferential (PersonalizedPageRank.java:30): dangling mass
-    returns to the preference vector, scaled by each node's weight.
-    Same alpha / iteration / checkpoint regime as the indicator-seed
-    variant above; one shuffle per iteration regardless of seed count.
-    """
-    alpha = cfg.ppr_alpha
-    trans = normalize_transition(edges, max_degree=max_degree).persist()
-    out_nodes = trans.select("src").distinct()
-
-    wsum = preference.groupBy("seed").agg(F.sum("w").alias("wsum"))
-    pref = (
-        preference.join(wsum, "seed")
-        .select("seed", "node", (F.col("w") / F.col("wsum")).alias("w"))
-        .persist()
-    )
-    ranks = pref.select("seed", "node", F.col("w").alias("rank")).localCheckpoint(
-        eager=False
-    )
-    for _ in range(cfg.ppr_max_iter):
-        spread = (
-            ranks.join(trans, ranks["node"] == trans["src"])
-            .groupBy("seed", "dst")
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("mass"))
-            .select("seed", F.col("dst").alias("node"), (alpha * F.col("mass")).alias("rank"))
-        )
-        dangling = (
-            ranks.join(out_nodes, ranks["node"] == out_nodes["src"], "left_anti")
-            .groupBy("seed")
-            .agg(F.sum("rank").alias("dmass"))
-        )
-        teleport = (
-            pref.join(dangling, "seed", "left")
-            .na.fill({"dmass": 0.0})
-            .select(
-                "seed",
-                "node",
-                (F.col("w") * ((1.0 - alpha) + alpha * F.col("dmass"))).alias("rank"),
-            )
-        )
-        ranks = (
-            spread.union(teleport)
-            .groupBy("seed", "node")
-            .agg(F.sum("rank").alias("rank"))
-            .localCheckpoint(eager=False)
-        )
-    return ranks
 
 
 def _zero_kl_directed(pairs: DataFrame, signatures: DataFrame,
@@ -457,196 +474,4 @@ def signature_features(
                 / 2.0
             )
         ).alias("sig_kl"),
-    )
-
-
-def personalized_pagerank_broadcast(
-    seeds: DataFrame,
-    edges: DataFrame,
-    cfg: ERConfig = ERConfig(),
-    max_degree: int | None = None,
-    csr_bc=None,
-) -> DataFrame:
-    """Broadcast-graph PPR: same semantics as ``personalized_pagerank``
-    (alpha, 3 iterations, strongly-preferential dangling) computed by
-    shipping the row-normalized transition matrix (CSR in plain numpy
-    arrays) to every executor and fanning SEEDS out via mapInPandas.
-
-    This is the reference's own architecture — one shared in-heap graph,
-    per-seed parallel walks (WeightedPersonalizedPageRank.java:233-266) —
-    re-expressed with Spark distributing the seed batches. It is the
-    right plan whenever the DICTIONARY graph fits executor memory
-    (10^8 edges ~ 2.4 GB), which holds far past 100 TB of input text;
-    the join-based variant above remains the fallback for graphs that
-    don't.
-
-    Embarrassingly parallel: zero shuffles after the one-time broadcast;
-    scaling is linear in cores.
-
-    Driver memory is bounded by the numpy CSR arrays alone (~28 bytes
-    per edge): the collect is Arrow-columnar (``toArrow`` → zero-copy
-    numpy views, no pandas block consolidation, no Python row objects)
-    and the node-id lookup is ``np.searchsorted`` over the sorted
-    unique-id array — no Python dict of node ids is ever built (a 1e8-
-    node dict alone would be ~10 GB of driver heap and would also ride
-    the broadcast pickle).
-    """
-    import numpy as np
-    import pandas as pd
-
-    alpha = cfg.ppr_alpha
-    bc = csr_bc if csr_bc is not None else _csr_broadcast(edges, max_degree)
-
-    def run_batch(batches):
-        n_, indptr_, dst_, p_, has_out_, rev_ = bc.value
-        for pdf in batches:
-            out_seed, out_node, out_rank = [], [], []
-            for raw_seed in pdf["seed"]:
-                raw_seed = int(raw_seed)
-                pos = int(np.searchsorted(rev_, raw_seed))
-                six = pos if pos < n_ and rev_[pos] == raw_seed else None
-                if six is None or not has_out_[six]:
-                    # isolated / dangling-only seed: fixed point at itself
-                    out_seed.append(raw_seed)
-                    out_node.append(raw_seed)
-                    out_rank.append(1.0)
-                    continue
-                idx, val = _ppr_sparse(
-                    bc.value,
-                    np.array([six], dtype=np.int64),
-                    np.array([1.0]),
-                    alpha,
-                    cfg.ppr_max_iter,
-                )
-                out_seed.extend([raw_seed] * len(idx))
-                out_node.extend(rev_[idx].tolist())
-                out_rank.extend(val.tolist())
-            yield pd.DataFrame({"seed": out_seed, "node": out_node, "rank": out_rank})
-
-    return seeds.select(F.col("seed").cast("long")).repartition(
-        seeds.sparkSession.sparkContext.defaultParallelism
-    ).mapInPandas(run_batch, schema="seed long, node long, rank double")
-
-
-def _csr_collect(edges: DataFrame, max_degree: int | None):
-    """Row-normalize, Arrow-collect and CSR-pack the transition matrix
-    as driver numpy arrays: (n, indptr, dst, p, has_out, rev_ids).
-    rev_ids is sorted — both the dense→original map and the
-    searchsorted lookup table."""
-    import numpy as np
-
-    tarrow = normalize_transition(edges, max_degree=max_degree).toArrow()
-    raw_src = tarrow.column("src").to_numpy().astype(np.int64, copy=False)
-    raw_dst = tarrow.column("dst").to_numpy().astype(np.int64, copy=False)
-    p = tarrow.column("p").to_numpy().astype(np.float64, copy=False)
-    del tarrow
-    uniq = np.unique(np.concatenate([raw_src, raw_dst]))
-    n = len(uniq)
-    src = np.searchsorted(uniq, raw_src)
-    dst = np.searchsorted(uniq, raw_dst)
-    order = np.argsort(src, kind="stable")
-    src, dst, p = src[order], dst[order], p[order]
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, src + 1, 1)
-    indptr = np.cumsum(indptr)
-    has_out = np.zeros(n, dtype=bool)
-    has_out[src] = True
-    return (n, indptr, dst, p, has_out, uniq)
-
-
-def _csr_broadcast(edges: DataFrame, max_degree: int | None):
-    """`_csr_collect` + broadcast to executors."""
-    sc = edges.sparkSession.sparkContext
-    return sc.broadcast(_csr_collect(edges, max_degree))
-
-
-def _ppr_sparse(csr, pidx, pval, alpha: float, iters: int):
-    """Per-seed sparse power iteration against the CSR arrays, with an
-    arbitrary preference vector (pidx dense-indices, pval weights;
-    entries with index >= n are graph-absent: pure-dangling receivers
-    of their own teleport mass). The accumulator stays sized by the
-    frontier's nonzeros, never O(|V|)."""
-    import numpy as np
-
-    n_, indptr_, dst_, p_, _has_out, _rev = csr
-    idx, val = pidx.copy(), pval.copy()
-    for _ in range(iters):
-        safe = np.minimum(idx, n_ - 1)
-        counts = np.where(idx < n_, indptr_[safe + 1] - indptr_[safe], 0)
-        dangling = float(val[counts == 0].sum())
-        nz = counts > 0
-        teleport = pval * ((1.0 - alpha) + alpha * dangling)
-        if nz.any():
-            starts = indptr_[idx[nz]]
-            lens = counts[nz]
-            flat = np.concatenate(
-                [np.arange(s, s + l) for s, l in zip(starts, lens)]
-            )
-            cat_i = np.append(dst_[flat], pidx)
-            cat_v = np.append(np.repeat(val[nz], lens) * p_[flat] * alpha, teleport)
-            idx, inv = np.unique(cat_i, return_inverse=True)
-            val = np.bincount(inv, weights=cat_v)
-        else:
-            idx, val = pidx.copy(), teleport
-    return idx, val
-
-
-def personalized_pagerank_pref_broadcast(
-    preference: DataFrame,
-    edges: DataFrame,
-    cfg: ERConfig = ERConfig(),
-    max_degree: int | None = None,
-    csr_bc=None,
-) -> DataFrame:
-    """Broadcast-CSR variant of ``personalized_pagerank_pref`` (G6):
-    one ``applyInPandas`` group per seed runs the whole walk in numpy
-    against the shared transition matrix — zero shuffles per iteration
-    versus ~3 for the join-based variant, the right plan whenever the
-    dictionary graph fits executor memory. Semantics identical
-    (strongly-preferential dangling; per-seed weight normalization);
-    preference nodes absent from the graph hold pure-dangling mass."""
-    import numpy as np
-    import pandas as pd
-
-    alpha = cfg.ppr_alpha
-    iters = cfg.ppr_max_iter
-    bc = csr_bc if csr_bc is not None else _csr_broadcast(edges, max_degree)
-
-    def one_seed(pdf: pd.DataFrame) -> pd.DataFrame:
-        csr = bc.value
-        n_, _indptr, _dst, _p, _has_out, rev_ = csr
-        seed = int(pdf["seed"].iloc[0])
-        # aggregate duplicate (seed, node) input rows FIRST: a raw
-        # duplicate absent node would otherwise get two distinct
-        # virtual indices and emit two output rows with split rank,
-        # diverging from the join-based variant's groupBy semantics
-        nodes_raw = pdf["node"].to_numpy(dtype=np.int64)
-        w_raw = pdf["w"].to_numpy(dtype=np.float64)
-        nodes, inv0 = np.unique(nodes_raw, return_inverse=True)
-        w = np.bincount(inv0, weights=w_raw)
-        w = w / w.sum()
-        pos = np.searchsorted(rev_, nodes)
-        pos_safe = np.minimum(pos, n_ - 1)
-        present = rev_[pos_safe] == nodes
-        # graph-absent preference nodes get virtual indices >= n
-        pidx = np.where(present, pos_safe, n_ + np.arange(len(nodes)))
-        # de-dup preference nodes (defensive)
-        pidx, inv = np.unique(pidx, return_inverse=True)
-        pval = np.bincount(inv, weights=w)
-        idx, val = _ppr_sparse(csr, pidx.astype(np.int64), pval, alpha, iters)
-        # map dense indices back: virtual indices recover the raw node id
-        absent_map = {int(n_ + k): int(nodes[k]) for k in range(len(nodes))}
-        out_nodes = [
-            int(rev_[i]) if i < n_ else absent_map[int(i)] for i in idx
-        ]
-        return pd.DataFrame(
-            {"seed": seed, "node": out_nodes, "rank": val}
-        )
-
-    return (
-        preference.select(
-            F.col("seed").cast("long"), F.col("node").cast("long"), F.col("w")
-        )
-        .groupBy("seed")
-        .applyInPandas(one_seed, schema="seed long, node long, rank double")
     )

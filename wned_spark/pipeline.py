@@ -348,13 +348,8 @@ def run_er_pipeline(
                     .union(gated.select(F.col("right_sid").alias("seed")))
                     .distinct()
                 )
-                if n_edges <= cfg.ppr_broadcast_max_edges:
-                    return ppr.personalized_pagerank_broadcast(
-                        seeds, edges, cfg, max_degree=cfg.ppr_max_degree
-                    )
-                return ppr.personalized_pagerank(
-                    seeds, edges, cfg, check_delta=cfg.ppr_check_delta,
-                    symmetric=True, max_degree=cfg.ppr_max_degree,
+                return ppr.personalized_pagerank_auto(
+                    ppr.indicator_preference(seeds), edges, cfg, n_edges=n_edges
                 )
 
             sigs = stage("ppr_signatures", _sigs)
