@@ -114,6 +114,51 @@ def test_expand_abbreviations_fuzzy_fallback(spark):
     assert out[("a", 2)] == "zqx"
 
 
+def test_expand_abbreviations_probe_and_join_share_one_table(spark):
+    """The exact-miss probe and the final join read one pinned
+    acronym-definition table. On a corpus where an acronym misses the
+    exact initials match (fuzzy path taken) and two raw acronym
+    spellings share one surface_norm: no mention row is added or lost,
+    every (conv_id, surface_norm) takes one definition, and canon_norm
+    is what the probe-then-rejoin form gave."""
+    rows = [
+        # conv a: "IBM" has no exact initials match -> abbrevSim fallback
+        ("a", 0, "IBM", "ibm", "ibm"),
+        ("a", 1, "International Business Machines Corp",
+         "international business machines corp",
+         "international business machines corp"),
+        # conv b: raw "AG" and "AGX" share surface_norm "ag"; only "AG"
+        # spells an exact definition, and both take it
+        ("b", 0, "AG", "ag", "ag"),
+        ("b", 1, "AGX", "ag", "ag"),
+        ("b", 2, "AGX", "ag", "ag"),
+        ("b", 3, "Alice Gardenbar", "alice gardenbar", "alice gardenbar"),
+        # not an acronym by raw surface: untouched
+        ("b", 4, "Ag", "ag", "ag"),
+    ]
+    mentions = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, surface string, surface_norm string, canon_norm string",
+    )
+    out = expand_abbreviations(mentions).collect()
+    assert len(out) == len(rows)
+    got = {(r["conv_id"], r["turn_idx"]): r["canon_norm"] for r in out}
+    assert got == {
+        ("a", 0): "international business machines corp",
+        ("a", 1): "international business machines corp",
+        ("b", 0): "alice gardenbar",
+        ("b", 1): "alice gardenbar",
+        ("b", 2): "alice gardenbar",
+        ("b", 3): "alice gardenbar",
+        ("b", 4): "ag",
+    }
+    defs = {}
+    for r in out:
+        if r["surface"].isupper():
+            defs.setdefault((r["conv_id"], r["surface_norm"]), set()).add(r["canon_norm"])
+    assert all(len(v) == 1 for v in defs.values()), defs
+
+
 def test_abbrev_sim_pinned_values():
     """Pinned to MentionExpansion.java:1162-1183 semantics (sorted-char
     Levenshtein with length penalty, best of the two extraction

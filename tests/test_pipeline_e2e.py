@@ -28,6 +28,27 @@ def _record_cancels(monkeypatch, spark) -> list:
     return calls
 
 
+def _last_job_id(sc) -> int:
+    """Run one marker job and return its id. Job ids are sequential, so
+    the ids of two markers bound the jobs submitted between them."""
+    sc.setJobGroup("test-marker", "marker")
+    try:
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup("test-marker"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _job_description(spark) -> str:
+    """The ``spark.job.description`` that a task of a fresh job sees."""
+    from pyspark import TaskContext
+
+    return spark.sparkContext.parallelize([0], 1).map(
+        lambda _: TaskContext.get().getLocalProperty("spark.job.description")
+    ).collect()[0]
+
+
 def _contingency_prf(clusters, gold_mentions) -> dict:
     """Pairwise P/R/F1 over ALL gold mention pairs, counted linearly
     from the cluster x entity table: with n_ij the mentions of cluster
@@ -190,7 +211,16 @@ def test_e2e_contingency_f1_seed1(spark):
     c = generate_corpus(spark, n_conversations=400, turns_per_conv=12,
                         n_entities=64, community_size=8, seed=1)
     c["transcripts"] = c["transcripts"].cache()
+    c["transcripts"].count()
+    # the same run as the benchmark's er_small op: count its Spark jobs
+    j0 = _last_job_id(spark.sparkContext)
     res = run_er_pipeline(spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig())
+    res.clusters.write.format("noop").mode("overwrite").save()
+    n_jobs = _last_job_id(spark.sparkContext) - j0 - 1
+    # 115 jobs before the probes were folded and single-consumer
+    # branches left lazy, 102 after; the budget allows 3 of run-to-run
+    # scheduling spread
+    assert n_jobs <= 105, n_jobs
     prf = _contingency_prf(res.clusters, c["gold_mentions"])
     assert prf["f1"] >= 0.99, prf
     c["transcripts"].unpersist()
@@ -224,3 +254,36 @@ def test_hub_pool_cancelled_when_main_thread_fails(spark, monkeypatch):
         assert cancels == ["wned-hub-pool"]
     finally:
         release.set()
+
+
+def test_stage_jobs_carry_the_stage_name(spark, monkeypatch):
+    """A job run while a stage is built sees the stage's name as its
+    ``spark.job.description``, on the main thread and on the hub pool,
+    and the caller's own description is restored afterwards."""
+    from wned_spark.operators import blocking, graph
+
+    seen: dict = {}
+    edges_built = threading.Event()
+
+    def tagged_edges(mentions, cfg):
+        seen["cooccur_edges"] = _job_description(spark)
+        edges_built.set()
+        return mentions.sparkSession.range(1)
+
+    def tagged_surfaces(mentions):
+        seen["surfaces"] = _job_description(spark)
+        assert edges_built.wait(120)
+        raise RuntimeError("stop after the surfaces stage")
+
+    monkeypatch.setattr(graph, "build_cooccurrence_edges", tagged_edges)
+    monkeypatch.setattr(blocking, "surfaces_of", tagged_surfaces)
+    c = generate_corpus(spark, n_conversations=4, turns_per_conv=4, n_entities=8)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        with pytest.raises(RuntimeError, match="stop after the surfaces stage"):
+            run_er_pipeline(spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig())
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {"cooccur_edges": "cooccur_edges", "surfaces": "surfaces"}

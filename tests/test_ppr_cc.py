@@ -398,6 +398,45 @@ def test_connected_components_auto_matches_distributed(spark):
     assert d1 == d2
 
 
+def test_connected_components_auto_gate_boundary(spark, monkeypatch):
+    """The bounded collect that gates the driver path: with
+    ``local_threshold`` at n-1 (distributed), n and n+1 (driver) for n
+    deduplicated edges the components are identical, an empty edge set
+    gives no rows, and the persisted edge set is released after each
+    call."""
+    from pyspark import StorageLevel
+
+    from wned_spark.operators import cc
+
+    rng = random.Random(7)
+    edges = sorted({(rng.randrange(30), rng.randrange(30)) for _ in range(40)})
+    n = sum(1 for a, b in edges if a != b)
+    df = spark.createDataFrame(edges + edges[:3], "u long, v long")
+    distributed = []
+    real = cc.connected_components
+    monkeypatch.setattr(
+        cc, "connected_components", lambda e, it: distributed.append(1) or real(e, it)
+    )
+
+    def released(d):
+        e = d.select("u", "v").filter(F.col("u") != F.col("v")).distinct()
+        return e.storageLevel == StorageLevel.NONE
+
+    comps = []
+    for threshold, on_driver in ((n - 1, False), (n, True), (n + 1, True)):
+        distributed.clear()
+        out = cc.connected_components_auto(df, local_threshold=threshold)
+        comps.append({r["node"]: r["component"] for r in out.collect()})
+        assert bool(distributed) != on_driver, threshold
+        assert released(df)
+    assert comps[0] == comps[1] == comps[2]
+    for empty in ([], [(3, 3)]):
+        e = spark.createDataFrame(empty, "u long, v long")
+        out = cc.connected_components_auto(e, local_threshold=0)
+        assert out.count() == 0 and out.columns == ["node", "component"]
+        assert released(e)
+
+
 def test_ppr_auto_matches_join_on_g3_graph(spark):
     """The g3 registry row routes through ``personalized_pagerank_auto``.
     Pin its broadcast-CSR branch (default gate) against its join branch

@@ -57,13 +57,12 @@ def _checksum(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def _union_find_local(edges: DataFrame) -> DataFrame:
-    """Driver union-find over an Arrow-collected edge list — the small-
-    graph fast path of ``connected_components_auto``. Identical output
-    contract (min-id component per node)."""
+def _union_find_local(spark, tbl) -> DataFrame:
+    """Driver union-find over an Arrow-collected (u, v) edge table — the
+    small-graph fast path of ``connected_components_auto``. Identical
+    output contract (min-id component per node)."""
     import numpy as np
 
-    tbl = edges.toArrow()
     u = tbl.column("u").to_numpy().astype(np.int64, copy=False)
     v = tbl.column("v").to_numpy().astype(np.int64, copy=False)
     uniq = np.unique(np.concatenate([u, v]))
@@ -105,7 +104,6 @@ def _union_find_local(edges: DataFrame) -> DataFrame:
         comp = uniq[np.array([find(i) for i in range(len(uniq))])]
     import pandas as pd
 
-    spark = edges.sparkSession
     return spark.createDataFrame(
         pd.DataFrame({"node": uniq, "component": comp}),
         "node long, component long",
@@ -116,7 +114,7 @@ def connected_components_auto(
     edges: DataFrame, max_iter: int = 20, local_threshold: int = 500_000
 ) -> DataFrame:
     """CC with a size-gated physical strategy (same output either way):
-    below ``local_threshold`` edges, Arrow-collect and union-find on
+    up to ``local_threshold`` edges, Arrow-collect and union-find on
     the driver — the surface MATCH graph is dictionary-sized (its node
     count is bounded by distinct surfaces, not corpus rows), so at
     10^12 turns it is still a small edge list (threshold sized for
@@ -125,15 +123,18 @@ def connected_components_auto(
     large-star/small-star rounds' ~10 job barriers dominate their own
     runtime. Above the threshold, the distributed alternating-star
     algorithm below. The same decision shape as AQE's broadcast-vs-
-    shuffle join, applied to the iterative operator."""
+    shuffle join, applied to the iterative operator.
+
+    ONE bounded collect, ``limit(local_threshold + 1)``, is both the
+    gate and the fast path's input. The deduplicated edges stay persisted
+    for the distributed branch and are released on return."""
     e = edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct().persist()
     try:
-        n = e.count()
-        if n == 0:
+        tbl = e.limit(local_threshold + 1).toArrow()
+        if tbl.num_rows == 0:
             return e.sparkSession.createDataFrame([], "node long, component long")
-        if n <= local_threshold:
-            # _union_find_local Arrow-collects eagerly — cache done
-            return _union_find_local(e)
+        if tbl.num_rows <= local_threshold:
+            return _union_find_local(e.sparkSession, tbl)
         # connected_components eagerly localCheckpoints its input up
         # front, so the persisted edge set is consumed before return
         return connected_components(e, max_iter)

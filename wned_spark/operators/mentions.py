@@ -410,16 +410,24 @@ def expand_abbreviations(
         .filter(F.col("rk") == 1)
         .select("conv_id", "surface_norm", "definition")
     )
+    # each distinct raw acronym with its exact-initials definition or
+    # null, PINNED: the probe and the final join both read it, so the
+    # acr ⋈ defs window runs once. A local checkpoint, not persist():
+    # the final join keeps its plan, so downstream plans do too
+    acr_def = acr.join(chosen, ["conv_id", "surface_norm"], "left").localCheckpoint(eager=False)
+    # one row per (conv_id, surface_norm) even when raw spellings share it
+    chosen_all = (
+        acr_def.filter(F.col("definition").isNotNull())
+        .select("conv_id", "surface_norm", "definition")
+        .distinct()
+    )
     # fuzzy fallback (R10 abbrevSim) for acronyms the exact join missed.
     # GATED on an emptiness probe of the missed set: the probe is one
-    # tiny dictionary-join action, while the fallback plan (anti-join +
-    # per-conversation cross + Arrow UDF + window) adds ~5 s of stage
+    # tiny dictionary-join action, while the fallback plan (per-
+    # conversation cross + Arrow UDF + window) adds ~5 s of stage
     # scheduling to the flagship even when every acronym matched
     # exactly — the common case on a clean corpus.
-    missed = acr.join(
-        chosen.select("conv_id", "surface_norm"), ["conv_id", "surface_norm"], "left_anti"
-    )
-    chosen_all = chosen
+    missed = acr_def.filter(F.col("definition").isNull()).drop("definition")
     if not missed.isEmpty():
         wf = Window.partitionBy("conv_id", "surface_norm").orderBy(
             F.desc("sim"), F.desc(F.length("definition")), F.asc("definition")
@@ -432,7 +440,7 @@ def expand_abbreviations(
             .filter(F.col("rk") == 1)
             .select("conv_id", "surface_norm", "definition")
         )
-        chosen_all = chosen.unionByName(fuzzy)
+        chosen_all = chosen_all.unionByName(fuzzy)
     out = mentions.join(chosen_all, ["conv_id", "surface_norm"], "left")
     base = F.col("canon_norm") if "canon_norm" in mentions.columns else F.col("surface_norm")
     return out.withColumn(

@@ -419,9 +419,9 @@ def signature_features(
     PRECONDITION: ``pairs`` must be DISTINCT on (seed_a, seed_b). A
     duplicated pair turns the full-outer join into a per-key cross
     product, QUADRATICALLY inflating the dot/norm/KL sums (worse than
-    the standalone kernels, whose inflation is linear). The pipeline
-    satisfies this by construction (``.distinct()`` before the call);
-    external callers must too — the kernel does not re-distinct
+    the standalone kernels, whose inflation is linear). The pipeline's
+    gated pair rows are distinct by construction; external callers
+    must dedupe their own — the kernel does not re-distinct
     internally to avoid paying a redundant shuffle on the common path.
     """
     from wned_spark.functions.similarity import cosine_expr

@@ -35,37 +35,28 @@ from wned_spark.functions.similarity import (
 
 
 def string_features(surface_pairs: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
-    """R2/R3/R4/R15 per-pair string features over DISTINCT
-    (left_norm, right_norm) rows: Jaro-Winkler (the one Python-UDF
-    feature), normalized Levenshtein, multiset bigram Dice
+    """R2/R3/R4/R15 per-pair string features, added as columns
+    ``name_jw``/``name_lev``/``name_dice`` to the (left_norm,
+    right_norm) rows of ``surface_pairs``: Jaro-Winkler (the one
+    Python-UDF feature), normalized Levenshtein, multiset bigram Dice
     (AliasLuceneIndex.java:327-329 — min-counts over non-distinct
-    bigrams, faithful on reduplicated names).
+    bigrams, faithful on reduplicated names). Every input row and
+    column is kept.
 
-    The PIPELINE calls this AFTER the SoftTFIDF cascade gate: only
-    ``name_soft`` feeds the gate, so evaluating the JW UDF on gate
-    survivors (~5% of blocked pairs at bench scale) instead of every
-    blocked pair removes ~95% of the hottest stage's Python work —
-    mirroring the reference, which scores fuzzy candidates only after
-    the candidate-selection prune (CSUtils.java:53-78)."""
+    The PIPELINE calls this on the gated pair table, AFTER the SoftTFIDF
+    cascade gate: only ``name_soft`` feeds the gate, so evaluating the
+    JW UDF on gate survivors (~5% of blocked pairs at bench scale)
+    instead of every blocked pair removes ~95% of the hottest stage's
+    Python work — mirroring the reference, which scores fuzzy candidates
+    only after the candidate-selection prune (CSUtils.java:53-78).
+
+    The UDF runs in 2 × defaultParallelism round-robin tasks, with no
+    size probe: sizing the width from the row count cost a checkpoint
+    and a count job on every call."""
     n = cfg.shingle_size
-    # work-adaptive width, same rationale as the SoftTFIDF JW stage:
-    # ~12 ms of ArrowEvalPython round-trip per task vs ~7 µs of JW per
-    # row — a fixed 2×cores width costs more boundary overhead than
-    # the whole kernel on a few-thousand-row survivor set, while the
-    # cap keeps dictionary-scale inputs cluster-wide
-    surface_pairs = surface_pairs.localCheckpoint(eager=False)
-    n_rows = surface_pairs.count()
-    width = max(
-        1,
-        min(
-            2 * surface_pairs.sparkSession.sparkContext.defaultParallelism,
-            -(-n_rows // 50_000),
-        ),
-    )
-    surface_pairs = surface_pairs.repartition(width)
-    return surface_pairs.select(
-        "left_norm",
-        "right_norm",
+    width = 2 * surface_pairs.sparkSession.sparkContext.defaultParallelism
+    return surface_pairs.repartition(width).select(
+        "*",
         jaro_winkler_udf(F.col("left_norm"), F.col("right_norm")).alias("name_jw"),
         levenshtein_norm(F.col("left_norm"), F.col("right_norm")).alias("name_lev"),
         bigram_dice_multiset(
@@ -89,14 +80,15 @@ def soft_tfidf_feature(
     work is one call per distinct token pair corpus-wide regardless of
     partitioning. Both produce identical scores (parity-pinned).
 
-    Both branches score DISTINCT pairs (one row per (left, right)):
-    callers left-join the result back, so a duplicated input row must
-    not yield a duplicated score row. The strategy probe is a BOUNDED
-    count — ``limit(gate+1).count()`` answers "are there at least
-    ``gate`` distinct pairs" without scanning past the gate.
+    Both branches add ``name_soft`` as a column to DISTINCT pair rows
+    (one row per (left, right)), so a caller's join back never
+    multiplies rows. The strategy probe is a BOUNDED count —
+    ``limit(gate+1).count()`` answers "are there at least ``gate``
+    distinct pairs" without scanning past the gate.
     ``assume_distinct=True`` skips the dedup pass when the caller
     already guarantees one row per pair (the pipeline's blocked pairs
-    are distinct by construction)."""
+    are distinct by construction); the input rows are then returned
+    with every column they carry."""
     pairs = (
         surface_pairs
         if assume_distinct
@@ -105,11 +97,7 @@ def soft_tfidf_feature(
     gate = cfg.soft_relational_min_pairs
     if pairs.limit(gate + 1).count() < gate:
         udf = make_soft_tfidf_udf(pairs, theta=cfg.soft_theta)
-        return pairs.select(
-            "left_norm",
-            "right_norm",
-            udf(F.col("left_norm"), F.col("right_norm")).alias("name_soft"),
-        )
+        return pairs.withColumn("name_soft", udf(F.col("left_norm"), F.col("right_norm")))
     return soft_tfidf_scores(pairs, theta=cfg.soft_theta, assume_distinct=True)
 
 
@@ -117,7 +105,8 @@ def soft_tfidf_scores(
     surface_pairs: DataFrame, theta: float = 0.90, assume_distinct: bool = False
 ) -> DataFrame:
     """Relational SoftTFIDF over (left_norm, right_norm) pairs →
-    (left_norm, right_norm, name_soft).
+    (left_norm, right_norm, name_soft); with ``assume_distinct=True``
+    the input rows keep every other column they carry.
 
     soft(A,B) = max over directions of
         sum_{t in A, best(t,B) >= theta} idf(t) * best(t, B)
@@ -355,10 +344,8 @@ def soft_tfidf_scores(
             ).alias("name_soft"),
         )
     )
-    return sp.join(scored_pairs, ["left_norm", "right_norm"], "left").select(
-        "left_norm",
-        "right_norm",
-        F.coalesce("name_soft", F.lit(0.0)).alias("name_soft"),
+    return sp.join(scored_pairs, ["left_norm", "right_norm"], "left").withColumn(
+        "name_soft", F.coalesce("name_soft", F.lit(0.0))
     )
 
 
@@ -396,15 +383,17 @@ def make_soft_tfidf_udf(
         "s",
         F.explode(F.filter(F.split(F.col("s"), r"[\s\.]+"), lambda t: t != "")).alias("tok"),
     ).distinct()
-    df_rows = (
+    head = (
         toks.groupBy("tok")
         .agg(F.count("*").alias("df"))  # rows are distinct (s, tok) already
         .orderBy(F.desc("df"), F.asc("tok"))
         .limit(max_vocab)
-        .collect()
     )
-    n_surfaces = max(1, surfaces.count())
-    idf = {r["tok"]: math.log(1.0 + n_surfaces / r["df"]) for r in df_rows}
+    # ONE action returns the idf head and N (the one-row surface count
+    # left-joined to the head, so an empty head still yields N)
+    rows = surfaces.agg(F.count("*").alias("n")).join(head, F.lit(True), "left").collect()
+    n_surfaces = max(1, rows[0]["n"])
+    idf = {r["tok"]: math.log(1.0 + n_surfaces / r["df"]) for r in rows if r["df"]}
     default_idf = math.log(1.0 + n_surfaces)
 
     def _tokens(s: str) -> list[str]:

@@ -40,6 +40,7 @@ iterative confident-decision feedback becomes transitive closure
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,30 +76,45 @@ def run_er_pipeline(
     """Run the full ER pipeline. With a ``catalog``, every stage is a
     committed resumable snapshot; without, stages persist in memory."""
 
-    def stage(name: str, fn, ckpt: bool = True, **kw) -> DataFrame:
-        if catalog is not None:
-            return catalog.run_stage(name, fn, **kw)
-        # HUB stages (ckpt=True) take a LAZY LOCAL CHECKPOINT: besides
-        # caching the data, it truncates the LOGICAL plan to a flat
-        # LogicalRDD. With plain persist() the cache serves the data
-        # but Catalyst still re-analyzes the full upstream tree on
-        # every downstream action — and AQE re-plans per shuffle
-        # stage, so driver-side planning compounded to ~5s per
-        # sub-stage by the end of the pipeline (measured: signature
-        # cosine over 31 cached rows took 58s deep vs 0.3s flat).
-        #
-        # BRANCH stages (ckpt=False) only persist(): under AQE even an
-        # eager=False localCheckpoint EXECUTES its shuffles at
-        # construction time (measured), which serializes the whole
-        # pipeline stage-by-stage on the driver. Leaving the
-        # independent feature branches (sig cosine / sig KL / ctx /
-        # prior) un-truncated lets ONE downstream action submit them
-        # together, and the DAG scheduler runs their shuffle stages
-        # CONCURRENTLY across cores. Their plans stay shallow because
-        # every input they read is already a checkpointed hub.
-        # (Catalog mode truncates naturally: parquet snapshots.)
-        d = fn()
-        return d.localCheckpoint(eager=False) if ckpt else d.persist()
+    @contextmanager
+    def described(name: str):
+        """Tag the jobs this thread submits meanwhile with ``name``."""
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(name)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+
+    def stage(name: str, fn, keep: str = "hub") -> DataFrame:
+        # Every job submitted while a stage is built carries its name
+        # (spark.job.description: UI, event log, listeners). Catalog
+        # mode commits each stage as a parquet snapshot; in memory,
+        # ``keep`` picks how the stage is held:
+        # - "hub" (read by several later stages): a LAZY LOCAL
+        #   CHECKPOINT, which also truncates the LOGICAL plan to a flat
+        #   LogicalRDD. With plain persist() Catalyst re-analyzes the
+        #   full upstream tree on every downstream action and AQE
+        #   re-plans per shuffle stage (measured: signature cosine over
+        #   31 cached rows took 58s deep vs 0.3s flat). Under AQE even
+        #   an eager=False localCheckpoint runs its shuffles at
+        #   construction, so a hub is also a barrier.
+        # - "pinned" (read more than once or by concurrent actions, and
+        #   must not be a barrier): persist() only.
+        # - "lazy" (ONE consumer: the SoftTFIDF, string, signature and
+        #   context features): no cache, which would only be an extra
+        #   write. Their plans stay shallow because every input they
+        #   read is a hub, and they fold into the consumer's action,
+        #   where the DAG scheduler runs their shuffle stages
+        #   CONCURRENTLY across cores.
+        with described(name):
+            if catalog is not None:
+                return catalog.run_stage(name, fn)
+            d = fn()
+            if keep == "hub":
+                return d.localCheckpoint(eager=False)
+            return d.persist() if keep == "pinned" else d
 
     # ---- CONCURRENT independent hub chains ----
     # cooccur_edges, the ctx-tfidf weight table, and the alias-dict
@@ -131,20 +147,19 @@ def run_er_pipeline(
     _JOB_GROUP = "wned-hub-pool"
     _futures = []
     try:
-        def _submit(name: str, fn, ckpt: bool = True):
+        def _submit(name: str, fn, keep: str = "hub"):
             """Run a stage on a worker thread (materialized on return);
             sequential fallback in catalog mode. Returns a 0-arg resolver."""
             if _pool is None:
-                d = stage(name, fn, ckpt=ckpt)
+                d = stage(name, fn, keep)
                 return lambda: d
 
             def _build():
-                spark.sparkContext.setJobGroup(
-                    _JOB_GROUP, f"hub stage: {name}", interruptOnCancel=False
-                )
-                d = stage(name, fn, ckpt=ckpt)
-                if not ckpt:
-                    d.count()  # force the persist on THIS thread
+                with described(name):
+                    spark.sparkContext.setJobGroup(_JOB_GROUP, name, interruptOnCancel=False)
+                    d = stage(name, fn, keep)
+                    if keep == "pinned":
+                        d.count()  # force the persist on THIS thread
                 return d
 
             fut = _pool.submit(_build)
@@ -156,14 +171,13 @@ def run_er_pipeline(
         # coref self-joins its input (2 references) and abbreviation
         # expansion references the coref output 3× — composing them
         # un-cached re-executes the extraction UDF up to 6× through the
-        # self-join branches (measured 134s vs 37s at 2.9M turns). persist
-        # (ckpt=False) breaks the recomputation without the serialized
+        # self-join branches (measured 134s vs 37s at 2.9M turns). pinning
+        # breaks the recomputation without the serialized
         # checkpoint barrier; only the final result is a hub checkpoint
         # (it feeds surfaces / edges / ctx / eval / clusters). ----
         m_ex = stage("mentions_extract", lambda: mention_ops.extract_mentions(transcripts),
-                     ckpt=False)
-        m_co = stage("mentions_coref", lambda: mention_ops.resolve_coref(m_ex),
-                     ckpt=False)
+                     "pinned")
+        m_co = stage("mentions_coref", lambda: mention_ops.resolve_coref(m_ex), "pinned")
         if cfg.use_abbrev_expansion:
             # parenthetical pattern-def mining reads ONLY the raw
             # transcripts (materialized by the caller), so it rides the
@@ -173,7 +187,7 @@ def run_er_pipeline(
                 _submit(
                     "pattern_defs",
                     lambda: mention_ops.mine_parenthetical_definitions(transcripts),
-                    ckpt=False,
+                    "pinned",
                 )
                 if cfg.use_pattern_defs
                 else None
@@ -221,7 +235,7 @@ def run_er_pipeline(
                 lambda: tfidf_ops.surface_context_weights(
                     mentions, transcripts, window_turns=cfg.ctx_window_turns
                 ),
-                ckpt=False,
+                "pinned",
             )
 
         # ---- distinct surfaces + blocked surface pairs (J2) ----
@@ -237,33 +251,28 @@ def run_er_pipeline(
                     surfaces, alias_dict, cfg, id_col="sid", key_col="sn"
                 )
 
-            cands_res = _submit("surface_candidates", _cands, ckpt=False)
+            cands_res = _submit("surface_candidates", _cands, "pinned")
 
         pairs = stage(
             "surface_pairs", lambda: blocking.candidate_surface_pairs(surfaces, cfg)
         )
 
         # ---- SoftTFIDF (the gate feature) over ALL blocked pairs ----
-        # branch, not hub: its only consumer is the gated_pairs build, so
-        # an intermediate checkpoint barrier would only serialize — folded
-        # into the gated action its shuffles co-schedule with shared_prior's
-        # no .distinct() here (r07): pairs is distinct on (left_sid,
-        # right_sid) by construction and sid == xxhash64(norm), so the
-        # norm pairs are already distinct — the explicit distinct was a
-        # pure extra exchange of the hot path (the pipeline equates
-        # surfaces by sid everywhere, so a 64-bit hash collision would
-        # already merge those surfaces upstream of this projection)
-        soft = stage(
+        # a lazy branch: its only consumer is the gated_pairs build, so
+        # a barrier would only serialize — folded into the gated action
+        # its shuffles co-schedule with shared_prior's. name_soft is
+        # added as a column on the pair rows themselves (r07): pairs is
+        # distinct on (left_sid, right_sid) by construction and
+        # sid == xxhash64(norm), so the rows are already the distinct
+        # norm pairs — a distinct projection plus a join back was two
+        # pure extra exchanges (the pipeline equates surfaces by sid
+        # everywhere, so a 64-bit hash collision would already merge
+        # those surfaces upstream). Every later pair table is a row-wise
+        # extension or a projection of these rows, so stays distinct.
+        feats = stage(
             "surface_soft",
-            lambda: scoring.soft_tfidf_feature(
-                pairs.select("left_norm", "right_norm"),
-                cfg,
-                assume_distinct=True,
-            ),
-            ckpt=False,
-        )
-        feats = pairs.join(soft, ["left_norm", "right_norm"], "left").na.fill(
-            {"name_soft": 0.0}
+            lambda: scoring.soft_tfidf_feature(pairs, cfg, assume_distinct=True),
+            "lazy",
         )
 
         # ---- prior feature via alias dictionary at surface level (J1/A2) ----
@@ -316,15 +325,8 @@ def run_er_pipeline(
         # only name_soft feeds the gate, so the JW UDF (the one Python
         # feature) runs on ~5% of the blocked pairs — measured 59s → ~4s
         # for the hottest stage at 2.7M blocked pairs on 8 cores
-        strf = stage(
-            "surface_features",
-            lambda: scoring.string_features(
-                gated.select("left_norm", "right_norm").distinct(), cfg
-            ),
-            ckpt=False,
-        )
-        survivors = gated.join(strf, ["left_norm", "right_norm"], "left").na.fill(
-            {"name_jw": 0.0, "name_lev": 0.0, "name_dice": 0.0}
+        survivors = stage(
+            "surface_features", lambda: scoring.string_features(gated, cfg), "lazy"
         )
 
         # ---- PPR semantic signatures (G1/G3/G5, J7/J8) ----
@@ -355,7 +357,7 @@ def run_er_pipeline(
             sigs = stage("ppr_signatures", _sigs)
             node_pairs = gated.select(
                 F.col("left_sid").alias("seed_a"), F.col("right_sid").alias("seed_b")
-            ).distinct()
+            )
             # R6 cosine + R7 semSim (1/ZeroKL over signatures,
             # SemanticSignatureEL.java:806) carried as TWO features, but
             # computed by the fused one-pass kernel: the (pair ×
@@ -369,7 +371,7 @@ def run_er_pipeline(
                 ).withColumnRenamed("seed_a", "left_sid").withColumnRenamed(
                     "seed_b", "right_sid"
                 ),
-                ckpt=False,
+                "lazy",
             )
             survivors = survivors.join(
                 sig_feats, ["left_sid", "right_sid"], "left"
@@ -383,14 +385,14 @@ def run_er_pipeline(
             from wned_spark.operators import tfidf as tfidf_ops
 
             ctx_w = ctx_w_res()
-            ctx_pairs = survivors.select("left_sid", "right_sid").distinct()
+            ctx_pairs = gated.select("left_sid", "right_sid")
             ctx_sim = stage(
                 "ctx_similarity",
                 lambda: tfidf_ops.pairwise_cosine(
                     ctx_pairs, ctx_w, doc_col="sid",
                     left_col="left_sid", right_col="right_sid",
                 ),
-                ckpt=False,
+                "lazy",
             )
             survivors = survivors.join(
                 ctx_sim, ["left_sid", "right_sid"], "left"
