@@ -218,9 +218,10 @@ def test_e2e_contingency_f1_seed1(spark):
     res.clusters.write.format("noop").mode("overwrite").save()
     n_jobs = _last_job_id(spark.sparkContext) - j0 - 1
     # 115 jobs before the probes were folded and single-consumer
-    # branches left lazy, 102 after; the budget allows 3 of run-to-run
-    # scheduling spread
-    assert n_jobs <= 105, n_jobs
+    # branches left lazy, 102 after; 84-85 once the pair features are
+    # scored row-wise from vector tables and the mentions hub reports
+    # its real size. The budget allows 5 of run-to-run scheduling spread
+    assert n_jobs <= 90, n_jobs
     prf = _contingency_prf(res.clusters, c["gold_mentions"])
     assert prf["f1"] >= 0.99, prf
     c["transcripts"].unpersist()

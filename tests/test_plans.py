@@ -82,30 +82,38 @@ def test_soft_tfidf_relational_plan_shape(spark):
     assert "Scan ExistingRDD" in plan, plan  # pinned shared tables
 
 
-def test_fused_signature_features_plan_shape(spark):
-    """The fused R6+R7 kernel must keep the (pair × signature-node)
-    join single-pass: exactly ONE aggregate pyramid (partial + final of
-    the fused groupBy) over one full-outer node join, no cartesian —
-    the point of the fusion is paying that shuffle once, not three
-    times as the composed single-feature kernels did."""
+def test_pair_feature_kernels_plan_shape(spark):
+    """The signature and context features are scored row-wise from
+    per-surface vector tables: the pair rows only join the vector table
+    once per side. With the vectors pinned (as the pipeline's hub and
+    pooled stage are), the plan holds no full-outer join, no cartesian
+    product and no aggregate at all — so nothing is aggregated after
+    the pair join, and no (pair × node) intermediate exists."""
     import re
 
     from pyspark.sql import Row
 
+    from wned_spark.functions.similarity import sparse_vectors
     from wned_spark.operators.ppr import signature_features
+    from wned_spark.operators.tfidf import pairwise_cosine
 
-    sigs = spark.createDataFrame(
-        [Row(seed=1, node=1, rank=0.6), Row(seed=1, node=2, rank=0.4),
-         Row(seed=2, node=2, rank=1.0)]
-    )
-    pairs = spark.createDataFrame([Row(seed_a=1, seed_b=2)])
-    plan = signature_features(pairs, sigs)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    assert "FullOuter" in plan, plan
-    # ONE logical aggregate pyramid renders as <= 2 physical aggregate
-    # operators (partial + final); the pre-fusion three-kernel shape
-    # rendered >= 4. Upper-bound (not exact-count) so a harmless
-    # planner change (ObjectHashAggregate fallback, AQE re-render)
-    # can't fail the suite without a real extra shuffle appearing.
-    aggs = re.findall(r"HashAggregate|SortAggregate|ObjectHashAggregate", plan)
-    assert 1 <= len(aggs) <= 2, (len(aggs), plan)
+    sigs = sparse_vectors(
+        spark.createDataFrame(
+            [Row(sid=1, node=1, rank=0.6), Row(sid=1, node=2, rank=0.4),
+             Row(sid=2, node=2, rank=1.0)]
+        ),
+        "sid", "node", "rank", "sig",
+    ).localCheckpoint()
+    ctx = sparse_vectors(
+        spark.createDataFrame(
+            [Row(sid=1, term="a", tfidf=1.5), Row(sid=2, term="a", tfidf=0.5)]
+        ),
+        "sid", "term", "tfidf", "ctx",
+    ).localCheckpoint()
+    rows = spark.createDataFrame([Row(left_sid=1, right_sid=2)])
+    for df in (signature_features(rows, sigs), pairwise_cosine(rows, ctx)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan, plan
+        assert "FullOuter" not in plan, plan
+        assert not re.findall(r"HashAggregate|SortAggregate|ObjectHashAggregate", plan), plan
+        assert plan.count("LeftOuter") == 2, plan

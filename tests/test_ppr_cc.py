@@ -209,11 +209,19 @@ def test_signature_zero_kl_identical_is_one(spark):
     assert abs(out["sig_kl"] - 1.0) < 1e-12
 
 
+def _sig_vectors(sigs):
+    """Long signatures (seed, node, rank) → the (sid, sig) vector table."""
+    from wned_spark.functions.similarity import sparse_vectors
+
+    return sparse_vectors(sigs.withColumnRenamed("seed", "sid"), "sid", "node", "rank", "sig")
+
+
 def test_signature_features_matches_single_kernels(spark):
-    """The fused one-pass kernel (sig_cosine + sig_kl together) must
-    equal composing signature_cosine and signature_zero_kl on random
-    signatures — including pairs missing one or both signatures, the
-    cases where the single kernels' fill/drop semantics differ most."""
+    """The row-wise kernel over signature vectors (sig_cosine + sig_kl
+    together) must equal composing the long-form signature_cosine and
+    signature_zero_kl on random signatures — including pairs missing
+    one or both signatures, the cases where the single kernels'
+    fill/drop semantics differ most."""
     from wned_spark.operators.ppr import (
         signature_cosine,
         signature_features,
@@ -240,10 +248,19 @@ def test_signature_features_matches_single_kernels(spark):
     sigs = spark.createDataFrame(rows)
     pairs = spark.createDataFrame(pair_rows).distinct()
 
-    fused = {
-        (r["seed_a"], r["seed_b"]): (r["sig_cosine"], r["sig_kl"])
-        for r in signature_features(pairs, sigs).collect()
-    }
+    # the kernel adds its columns to the rows it is given: other columns
+    # ride along, and a duplicated row is scored twice, identically
+    gated = pairs.select(
+        F.col("seed_a").alias("left_sid"), F.col("seed_b").alias("right_sid"),
+        F.lit("x").alias("tag"),
+    )
+    gated = gated.union(gated.filter((F.col("left_sid") == 0) & (F.col("right_sid") == 10)))
+    out = signature_features(gated, _sig_vectors(sigs)).collect()
+    assert len(out) == gated.count() and {r["tag"] for r in out} == {"x"}
+    fused = {}
+    for r in out:
+        key, val = (r["left_sid"], r["right_sid"]), (r["sig_cosine"], r["sig_kl"])
+        assert fused.setdefault(key, val) == val, key
     cos = {
         (r["seed_a"], r["seed_b"]): r["sig_cosine"]
         for r in signature_cosine(pairs, sigs).collect()
@@ -258,11 +275,14 @@ def test_signature_features_matches_single_kernels(spark):
         # norm; the pipeline refills them with 0.0 — fused emits the 0
         assert abs(c_f - cos.get(key, 0.0)) < 1e-9, key
         assert abs(k_f - kl[key]) < 1e-9, key
+    # both signatures missing: cosine 0, each directed KL gamma
+    assert fused[(10, 11)] == (0.0, 1.0 / 11.0)
 
 
 def test_surface_context_weights_and_cosine(spark):
     """ctx feature source: two surfaces sharing context terms score
     higher than two that don't; weights match the Lucene tf-idf form."""
+    from wned_spark.functions.similarity import sparse_vectors
     from wned_spark.operators.tfidf import pairwise_cosine, surface_context_weights
 
     transcripts = spark.createDataFrame(
@@ -281,17 +301,29 @@ def test_surface_context_weights_and_cosine(spark):
         ],
         "conv_id string, turn_idx int, surface_norm string",
     )
-    w = surface_context_weights(mentions, transcripts, window_turns=1)
+    weights = surface_context_weights(mentions, transcripts, window_turns=1)
+    long = {}
+    for r in weights.collect():
+        long.setdefault(r["sid"], {})[r["term"]] = r["tfidf"]
     sid = {r["sn"]: r["sid"] for r in mentions.select(
         F.col("surface_norm").alias("sn"),
         F.xxhash64("surface_norm").alias("sid")).distinct().collect()}
+    no_ctx = 12345  # a surface with no context vector
     pairs = spark.createDataFrame(
         [Row(left_sid=sid["s one"], right_sid=sid["s two"]),
-         Row(left_sid=sid["s one"], right_sid=sid["s three"])],
+         Row(left_sid=sid["s one"], right_sid=sid["s three"]),
+         Row(left_sid=no_ctx, right_sid=sid["s two"])],
     )
+    vectors = sparse_vectors(weights, "sid", "term", "tfidf", "ctx")
     got = {(r["left_sid"], r["right_sid"]): r["ctx_cosine"]
-           for r in pairwise_cosine(pairs, w, doc_col="sid",
-                                    left_col="left_sid", right_col="right_sid").collect()}
+           for r in pairwise_cosine(pairs, vectors).collect()}
+    for (a, b), c in got.items():
+        va, vb = long.get(a, {}), long.get(b, {})
+        dot = sum(x * vb.get(t, 0.0) for t, x in va.items())
+        na = sum(x * x for x in va.values()) ** 0.5
+        nb = sum(x * x for x in vb.values()) ** 0.5
+        assert abs(c - (dot / (na * nb) if na and nb else 0.0)) < 1e-9, (a, b)
+    assert got[(no_ctx, sid["s two"])] == 0.0
     same_conv = got[(sid["s one"], sid["s two"])]
     diff_conv = got[(sid["s one"], sid["s three"])]
     assert same_conv > 0.5
@@ -498,3 +530,58 @@ def test_ppr_auto_leaves_caller_edges_cached(spark):
             assert edges.is_cached, gate
     finally:
         edges.unpersist()
+
+
+def _pair_features(spark, weights, sigs, pairs) -> dict:
+    """ctx_cosine, sig_cosine and sig_kl per pair, from long-form
+    context weights (sid, term, tfidf) and signatures (seed, node, rank)."""
+    from wned_spark.functions.similarity import sparse_vectors
+    from wned_spark.operators.ppr import signature_features
+    from wned_spark.operators.tfidf import pairwise_cosine
+
+    ctx = sparse_vectors(weights, "sid", "term", "tfidf", "ctx")
+    out = pairwise_cosine(signature_features(pairs, _sig_vectors(sigs)), ctx)
+    return {
+        (r["left_sid"], r["right_sid"]): (r["ctx_cosine"], r["sig_cosine"], r["sig_kl"])
+        for r in out.collect()
+    }
+
+
+def test_pair_features_bit_equal_across_plans(spark):
+    """ctx_cosine, sig_cosine and sig_kl are the same bits under two
+    physical plans of the same input: broadcast joins against shuffle
+    joins (autoBroadcastJoinThreshold=-1), one input partition in key
+    order against several in shuffled order. Every sum runs in vector
+    key order, so no float sum depends on the order rows arrive in."""
+    rng = random.Random(29)
+    n_docs, n_terms = 24, 300
+    weights, sigs = [], []
+    for d in range(n_docs):
+        # magnitudes spread over six decades, so reordering a sum
+        # changes its last bits
+        for t in rng.sample(range(n_terms), rng.randint(20, 120)):
+            weights.append((d, f"t{t}", 10 ** rng.uniform(-3, 3)))
+        for n_ in rng.sample(range(n_terms), rng.randint(20, 120)):
+            sigs.append((d, n_, 10 ** rng.uniform(-6, 0)))
+    pairs = [(a, b) for a in range(n_docs + 2) for b in range(n_docs + 2) if a != b]
+
+    def frames(rows_w, rows_s, rows_p, parts):
+        return (
+            spark.createDataFrame(rows_w, "sid long, term string, tfidf double").repartition(parts),
+            spark.createDataFrame(rows_s, "seed long, node long, rank double").repartition(parts),
+            spark.createDataFrame(rows_p, "left_sid long, right_sid long").repartition(parts),
+        )
+
+    base = _pair_features(spark, *frames(sorted(weights), sorted(sigs), pairs, 1))
+    shuffled = [list(x) for x in (weights, sigs, pairs)]
+    for x in shuffled:
+        rng.shuffle(x)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        other = _pair_features(spark, *frames(*shuffled, 5))
+    finally:
+        spark.conf.set(key, prev)
+    assert len(base) == len(pairs)
+    assert base == other

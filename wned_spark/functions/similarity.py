@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -143,6 +143,80 @@ def cosine_expr(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.when((norm_a == 0) | (norm_b == 0), F.lit(0.0)).otherwise(
         dot / (norm_a * norm_b)
     )
+
+
+def sparse_vectors(df: DataFrame, key: str, k: str, w: str, out: str) -> DataFrame:
+    """Long rows ``(key, k, w)`` → one row ``(key, out)`` per key, where
+    ``out`` is the sparse vector ``map<k, w>`` — the in-heap Map of
+    VectorSimilarity.java:22-104 as a column. One groupBy; the entries
+    are sorted by ``k`` before the map is built, so every sum the
+    ``sparse_*`` helpers take over a vector runs in key order, whatever
+    order the plan delivered the rows in. ``(key, k)`` must be unique
+    (a duplicate raises under Spark's default mapKeyDedupPolicy).
+
+    Per-key bound: one vector holds the nonzero entries of one key, so
+    a surface's context vector holds at most the vocabulary of that
+    surface's contexts, and a PPR signature at most its seed's
+    ``ppr_max_iter``-hop neighbourhood."""
+    return df.groupBy(key).agg(
+        F.map_from_entries(F.array_sort(F.collect_list(F.struct(k, w)))).alias(out)
+    )
+
+
+def with_pair_vectors(rows: DataFrame, vectors: DataFrame, vec: str) -> DataFrame:
+    """Left-join the vector table ``(sid, <vec>)`` to pair rows
+    ``(left_sid, right_sid, ...)`` once per side, adding ``<vec>_l`` and
+    ``<vec>_r`` (null where a side has no vector). The rows keep every
+    column and their multiplicity."""
+    def side(key: str, suffix: str) -> DataFrame:
+        return vectors.select(F.col("sid").alias(key), F.col(vec).alias(vec + suffix))
+
+    return rows.join(side("left_sid", "_l"), "left_sid", "left").join(
+        side("right_sid", "_r"), "right_sid", "left"
+    )
+
+
+# The sparse_* helpers pair two vectors with map_zip_with, which hashes
+# their keys (O(|a| + |b|) per row); a map lookup scans the key array,
+# so looking up every key of one vector in the other would cost
+# O(|a| * |b|). The zipped map iterates a's keys in order, then the keys
+# only b holds, so a sum of terms that vanish off a's keys runs in a's
+# key order.
+def _zip_sum(a: Column, b: Column, term) -> Column:
+    """Σ over the union of keys of ``term(x, y)`` (x = a's weight, y =
+    b's, null where a side lacks the key); a null ``b`` counts as empty
+    (map_filter to nothing keeps a's type), a null ``a`` gives null."""
+    empty = F.map_filter(a, lambda _k, _v: F.lit(False))
+    zipped = F.map_zip_with(a, F.coalesce(b, empty), lambda _k, x, y: term(x, y))
+    return F.aggregate(F.map_values(zipped), F.lit(0.0), lambda acc, t: acc + t)
+
+
+def sparse_norm(a: Column) -> Column:
+    """L2 norm of a sparse vector, squares summed in key order."""
+    return F.sqrt(F.aggregate(F.map_values(a), F.lit(0.0), lambda acc, v: acc + v * v))
+
+
+def sparse_cosine(a: Column, b: Column) -> Column:
+    """R6 cosine of two sparse vectors; 0.0 when either is null (no
+    vector) or has zero norm. The dot product sums the shared keys'
+    products in key order."""
+    dot = _zip_sum(a, b, lambda x, y: F.coalesce(x * y, F.lit(0.0)))
+    return F.coalesce(cosine_expr(dot, sparse_norm(a), sparse_norm(b)), F.lit(0.0))
+
+
+def sparse_zero_kl(p: Column, q: Column, eps: float, gamma: float) -> Column:
+    """R7 directed ZeroKL(p || q) over sparse vectors, the term
+    structure of VectorSimilarity.java:87-104: each key of ``p`` adds
+    p*gamma when q is missing or <= eps, else p*log2(p/q), in p's key
+    order. A null ``q`` leaves all of p's mass unmatched; a null ``p``
+    (no vector) gives ``gamma``, the value of an unmatched unit mass."""
+    kl = _zip_sum(
+        p, q,
+        lambda x, y: F.when(x.isNull(), F.lit(0.0))
+        .when(F.coalesce(y, F.lit(0.0)) <= F.lit(eps), x * F.lit(gamma))
+        .otherwise(x * F.log2(x / y)),
+    )
+    return F.coalesce(kl, F.lit(gamma))
 
 
 # ---------------------------------------------------------------- R7

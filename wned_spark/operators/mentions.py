@@ -412,9 +412,14 @@ def expand_abbreviations(
     )
     # each distinct raw acronym with its exact-initials definition or
     # null, PINNED: the probe and the final join both read it, so the
-    # acr ⋈ defs window runs once. A local checkpoint, not persist():
-    # the final join keeps its plan, so downstream plans do too
-    acr_def = acr.join(chosen, ["conv_id", "surface_norm"], "left").localCheckpoint(eager=False)
+    # acr ⋈ defs window runs once. persist(), not a local checkpoint:
+    # the probe loads the cache, which then reports its real size, so
+    # the size estimate of the returned table (and of the mentions hub
+    # built from it) is real rather than a product of join estimates,
+    # and later joins against it plan broadcasts up front. The cache
+    # (one row per distinct raw acronym) lives as long as the session's
+    # other pinned mention tables.
+    acr_def = acr.join(chosen, ["conv_id", "surface_norm"], "left").persist()
     # one row per (conv_id, surface_norm) even when raw spellings share it
     chosen_all = (
         acr_def.filter(F.col("definition").isNotNull())

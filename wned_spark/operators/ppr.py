@@ -388,90 +388,43 @@ def signature_zero_kl(
 
 
 def signature_features(
-    pairs: DataFrame,
+    rows: DataFrame,
     signatures: DataFrame,
     eps: float = 1e-6,
     gamma: float = 10.0,
 ) -> DataFrame:
-    """Fused R6+R7: ``sig_cosine`` AND symmetrized-ZeroKL ``sig_kl``
-    from ONE pass over the pair-node join.
+    """Fused R6+R7: adds ``sig_cosine`` and symmetrized-ZeroKL
+    ``sig_kl`` to pair rows ``(left_sid, right_sid, ...)``, from the
+    signature vectors ``(sid, sig)`` (:func:`~wned_spark.functions.
+    similarity.sparse_vectors` over the PPR rows, ``sig`` a map node →
+    rank).
 
-    ``signature_cosine`` + ``signature_zero_kl`` each materialize the
-    (pair × signature-node) join — three times total (cosine once, KL
-    once per direction). That join is the most voluminous intermediate
-    of the feature stage (|pairs| × |signature| rows), so at scale the
-    pipeline was paying its shuffle three times for numbers derivable
-    from the same rows. Here one full-outer join per (pair, node)
-    carries both sides' masses, and a single groupBy produces the dot
-    product, both norms (each side's rows are complete within its
-    group, so the per-group norm equals the global per-seed norm) and
-    both directed ZeroKL sums — exact VectorSimilarity.java:22-43 +
-    :87-104 term structure, one shuffle pyramid instead of three.
+    Each row picks up its two vectors by one left join per side and
+    scores them in place — cosine, norms and both directed ZeroKL sums
+    (VectorSimilarity.java:22-43 + :87-104) over the two maps, every sum
+    in node order — so there is no (pair × node) intermediate, no
+    aggregate and no join back, and the result does not depend on the
+    physical plan. The rows keep every column and their multiplicity; a
+    duplicated pair is scored twice, identically.
 
-    Semantics are identical to composing the two single-feature kernels
+    Semantics are those of composing the two long-form kernels
     (parity-pinned in tests/test_ppr_cc.py): a pair with a missing
     signature on either side gets cosine 0; a missing side's directed
-    KL is gamma (all mass unmatched); a pair missing both signatures
-    falls out of the join entirely and is restored by the final left
-    join with (0, 1/(1+gamma)). The standalone kernels remain the
-    driver-oracle surface (r7_zero_kl) and the second-pass scorer.
+    KL is gamma (all mass unmatched), so a pair missing both gets
+    1/(1+gamma). ``signature_cosine`` and ``signature_zero_kl`` remain
+    the long-form surface (the r7 registry row, the second pass)."""
+    from wned_spark.functions.similarity import (
+        sparse_cosine,
+        sparse_zero_kl,
+        with_pair_vectors,
+    )
 
-    PRECONDITION: ``pairs`` must be DISTINCT on (seed_a, seed_b). A
-    duplicated pair turns the full-outer join into a per-key cross
-    product, QUADRATICALLY inflating the dot/norm/KL sums (worse than
-    the standalone kernels, whose inflation is linear). The pipeline's
-    gated pair rows are distinct by construction; external callers
-    must dedupe their own — the kernel does not re-distinct
-    internally to avoid paying a redundant shuffle on the common path.
-    """
-    from wned_spark.functions.similarity import cosine_expr
-
-    sa = signatures.select(
-        F.col("seed").alias("seed_a"), "node", F.col("rank").alias("p")
-    )
-    sb = signatures.select(
-        F.col("seed").alias("seed_b"), "node", F.col("rank").alias("q")
-    )
-    j = pairs.join(sa, "seed_a").join(
-        pairs.join(sb, "seed_b"), ["seed_a", "seed_b", "node"], "full_outer"
-    )
-    p0 = F.coalesce(F.col("p"), F.lit(0.0))
-    q0 = F.coalesce(F.col("q"), F.lit(0.0))
-    # ZeroKL row terms (VectorSimilarity.java:87-104): skip absent p;
-    # q missing-or-tiny contributes p*gamma, else p*log2(p/q)
-    term_ab = (
-        F.when(F.col("p").isNull(), F.lit(0.0))
-        .when(q0 <= F.lit(eps), F.col("p") * F.lit(gamma))
-        .otherwise(F.col("p") * F.log2(F.col("p") / F.col("q")))
-    )
-    term_ba = (
-        F.when(F.col("q").isNull(), F.lit(0.0))
-        .when(p0 <= F.lit(eps), F.col("q") * F.lit(gamma))
-        .otherwise(F.col("q") * F.log2(F.col("q") / F.col("p")))
-    )
-    g = j.groupBy("seed_a", "seed_b").agg(
-        F.sum(p0 * q0).alias("dot"),
-        F.sqrt(F.sum(p0 * p0)).alias("norm_a"),
-        F.sqrt(F.sum(q0 * q0)).alias("norm_b"),
-        F.sum(term_ab).alias("kl_ab"),
-        F.sum(term_ba).alias("kl_ba"),
-        F.max(F.col("p").isNotNull().cast("int")).alias("has_a"),
-        F.max(F.col("q").isNotNull().cast("int")).alias("has_b"),
-    )
-    kl_ab = F.when(F.col("has_a") == 1, F.col("kl_ab")).otherwise(F.lit(gamma))
-    kl_ba = F.when(F.col("has_b") == 1, F.col("kl_ba")).otherwise(F.lit(gamma))
-    return pairs.join(g, ["seed_a", "seed_b"], "left").select(
-        "seed_a",
-        "seed_b",
-        F.when(F.col("dot").isNull(), F.lit(0.0))
-        .otherwise(cosine_expr(F.col("dot"), F.col("norm_a"), F.col("norm_b")))
-        .alias("sig_cosine"),
-        (
-            1.0
-            / (
-                1.0
-                + (F.coalesce(kl_ab, F.lit(gamma)) + F.coalesce(kl_ba, F.lit(gamma)))
-                / 2.0
-            )
-        ).alias("sig_kl"),
+    a, b = F.col("sig_l"), F.col("sig_r")
+    kl_ab = sparse_zero_kl(a, b, eps, gamma)
+    kl_ba = sparse_zero_kl(b, a, eps, gamma)
+    return (
+        with_pair_vectors(rows, signatures, "sig")
+        .withColumn("sig_cosine", sparse_cosine(a, b))
+        .withColumn("sig_kl", 1.0 / (1.0 + (kl_ab + kl_ba) / 2.0))
+        .drop("sig_l", "sig_r")
     )

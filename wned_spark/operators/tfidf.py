@@ -1,9 +1,10 @@
-"""TF-IDF document-term weights + long-form cosine (A3/A4/R6).
+"""TF-IDF document-term weights (A3/A4) + sparse-vector cosine (R6).
 
 Replaces the reference's Lucene term-vector index + in-heap context
 vectors (``common/indexing/TFIDF3x.java:128-228``,
 ``graph/similarity/context/MentionContext.java:32-91``) with a plain
-``(doc, term, weight)`` DataFrame.
+``(doc, term, weight)`` DataFrame, folded into one ``map<term, tfidf>``
+per document (``sparse_vectors``) where pairs are scored.
 
 Formula pinned to Lucene DefaultSimilarity as the reference uses it
 (TFIDF3x.java:128-178): tf = sqrt(freq), idf = 1 + ln(N / (df + 1)).
@@ -120,40 +121,19 @@ def surface_context_weights(
     return doc_term_weights(toks, "sid", n_docs=n_docs)
 
 
-def pairwise_cosine(
-    pairs: DataFrame, weights: DataFrame, doc_col: str = "doc",
-    left_col: str = "left_doc", right_col: str = "right_doc",
-    out_col: str = "ctx_cosine",
-) -> DataFrame:
-    """Long-form sparse cosine between document vectors for given pairs
-    (R6 as join+agg; norms precomputed once)."""
-    from wned_spark.functions.similarity import cosine_expr
+def pairwise_cosine(rows: DataFrame, vectors: DataFrame) -> DataFrame:
+    """R6 cosine between document vectors, added as ``ctx_cosine`` to
+    pair rows ``(left_sid, right_sid, ...)``. ``vectors`` is
+    ``(sid, ctx)`` (:func:`~wned_spark.functions.similarity.
+    sparse_vectors` over :func:`surface_context_weights`, a map term →
+    tfidf): each row joins its two vectors, one left join per side, and
+    takes dot and norms in term order — no (pair × term) join, no
+    aggregate, no join back, and the same bits under any physical plan.
+    A side without a vector scores 0."""
+    from wned_spark.functions.similarity import sparse_cosine, with_pair_vectors
 
-    norms = weights.groupBy(doc_col).agg(
-        F.sqrt(F.sum(F.col("tfidf") * F.col("tfidf"))).alias("norm")
-    )
-    wa = weights.select(
-        F.col(doc_col).alias(left_col), "term", F.col("tfidf").alias("wa")
-    )
-    wb = weights.select(
-        F.col(doc_col).alias(right_col), "term", F.col("tfidf").alias("wb")
-    )
-    dots = (
-        pairs.join(wa, left_col)
-        .join(wb, [right_col, "term"])
-        .groupBy(left_col, right_col)
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
-    )
-    na = norms.select(F.col(doc_col).alias(left_col), F.col("norm").alias("norm_a"))
-    nb = norms.select(F.col(doc_col).alias(right_col), F.col("norm").alias("norm_b"))
     return (
-        pairs.join(dots, [left_col, right_col], "left")
-        .na.fill({"dot": 0.0})
-        .join(na, left_col)
-        .join(nb, right_col)
-        .select(
-            left_col,
-            right_col,
-            cosine_expr(F.col("dot"), F.col("norm_a"), F.col("norm_b")).alias(out_col),
-        )
+        with_pair_vectors(rows, vectors, "ctx")
+        .withColumn("ctx_cosine", sparse_cosine(F.col("ctx_l"), F.col("ctx_r")))
+        .drop("ctx_l", "ctx_r")
     )

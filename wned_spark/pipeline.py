@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wned_spark.config import ERConfig
+from wned_spark.functions.similarity import sparse_vectors
 from wned_spark.operators import blocking, candidates as cand_ops, cc, graph, mentions as mention_ops, ppr, scoring
 from wned_spark.operators.evaluate import label_pairs, pairwise_prf
 from wned_spark.plans.catalog import Catalog
@@ -105,9 +106,11 @@ def run_er_pipeline(
         # - "lazy" (ONE consumer: the SoftTFIDF, string, signature and
         #   context features): no cache, which would only be an extra
         #   write. Their plans stay shallow because every input they
-        #   read is a hub, and they fold into the consumer's action,
-        #   where the DAG scheduler runs their shuffle stages
-        #   CONCURRENTLY across cores.
+        #   read is a hub or a pinned table, and they fold into the
+        #   consumer's action: the SoftTFIDF and string features' shuffle
+        #   stages run there CONCURRENTLY across cores, and the signature
+        #   and context features are columns computed row by row on the
+        #   survivor rows after one join per side with a vector table.
         with described(name):
             if catalog is not None:
                 return catalog.run_stage(name, fn)
@@ -224,16 +227,20 @@ def run_er_pipeline(
                 "cooccur_edges", lambda: graph.build_cooccurrence_edges(mentions, cfg)
             )
 
-        # the ctx-tfidf weight table needs only mentions + transcripts —
-        # its ~20% of pipeline compute overlaps the whole blocking chain
-        ctx_w_res = None
+        # the context vectors (sid, ctx: a map term -> tfidf) need only
+        # mentions + transcripts — their ~20% of pipeline compute
+        # overlaps the whole blocking chain
+        ctx_v_res = None
         if cfg.use_ctx_feature:
             from wned_spark.operators import tfidf as tfidf_ops
 
-            ctx_w_res = _submit(
+            ctx_v_res = _submit(
                 "ctx_tfidf",
-                lambda: tfidf_ops.surface_context_weights(
-                    mentions, transcripts, window_turns=cfg.ctx_window_turns
+                lambda: sparse_vectors(
+                    tfidf_ops.surface_context_weights(
+                        mentions, transcripts, window_turns=cfg.ctx_window_turns
+                    ),
+                    "sid", "term", "tfidf", "ctx",
                 ),
                 "pinned",
             )
@@ -330,11 +337,9 @@ def run_er_pipeline(
         )
 
         # ---- PPR semantic signatures (G1/G3/G5, J7/J8) ----
-        # NOTE every auxiliary feature (sig_sim, shared prior) is derived
-        # from the PERSISTED gated stage — deriving one from the already-
-        # feature-joined DataFrame would embed the other feature's whole
-        # subplan in its lineage (left joins are not prunable) and compute
-        # it twice.
+        # the seeds come from the gated hub; the signature and context
+        # features are columns added row-wise to the survivor rows, each
+        # from a per-surface vector table joined to both sides
         n_edges = None
         edges = None
         if use_signatures:
@@ -350,53 +355,38 @@ def run_er_pipeline(
                     .union(gated.select(F.col("right_sid").alias("seed")))
                     .distinct()
                 )
-                return ppr.personalized_pagerank_auto(
+                ranks = ppr.personalized_pagerank_auto(
                     ppr.indicator_preference(seeds), edges, cfg, n_edges=n_edges
                 )
+                return sparse_vectors(
+                    ranks.withColumnRenamed("seed", "sid"), "sid", "node", "rank", "sig"
+                )
 
+            # one (sid, sig) row per seed: a map node -> rank
             sigs = stage("ppr_signatures", _sigs)
-            node_pairs = gated.select(
-                F.col("left_sid").alias("seed_a"), F.col("right_sid").alias("seed_b")
-            )
             # R6 cosine + R7 semSim (1/ZeroKL over signatures,
-            # SemanticSignatureEL.java:806) carried as TWO features, but
-            # computed by the fused one-pass kernel: the (pair ×
-            # signature-node) join is the feature stage's biggest
-            # intermediate, and the separate kernels shuffled it three
-            # times (cosine + KL per direction) for one set of rows
-            sig_feats = stage(
+            # SemanticSignatureEL.java:806) carried as TWO features,
+            # scored row-wise on the survivor rows from their two
+            # signature vectors
+            survivors = stage(
                 "sig_features",
                 lambda: ppr.signature_features(
-                    node_pairs, sigs, eps=cfg.kl_eps, gamma=cfg.kl_gamma
-                ).withColumnRenamed("seed_a", "left_sid").withColumnRenamed(
-                    "seed_b", "right_sid"
+                    survivors, sigs, eps=cfg.kl_eps, gamma=cfg.kl_gamma
                 ),
                 "lazy",
             )
-            survivors = survivors.join(
-                sig_feats, ["left_sid", "right_sid"], "left"
-            ).na.fill({"sig_cosine": 0.0, "sig_kl": 0.0})
 
         # ---- "local" context feature (WNED's 4-feature family: prior /
         # local / semSim / nameSim — utils/Feature.java:20-38): tf-idf
         # cosine between the surfaces' conversation contexts
         # (TFIDF3x.java:197-228, MentionContext.java:32-91) ----
         if cfg.use_ctx_feature:
-            from wned_spark.operators import tfidf as tfidf_ops
-
-            ctx_w = ctx_w_res()
-            ctx_pairs = gated.select("left_sid", "right_sid")
-            ctx_sim = stage(
+            ctx_v = ctx_v_res()
+            survivors = stage(
                 "ctx_similarity",
-                lambda: tfidf_ops.pairwise_cosine(
-                    ctx_pairs, ctx_w, doc_col="sid",
-                    left_col="left_sid", right_col="right_sid",
-                ),
+                lambda: tfidf_ops.pairwise_cosine(survivors, ctx_v),
                 "lazy",
             )
-            survivors = survivors.join(
-                ctx_sim, ["left_sid", "right_sid"], "left"
-            ).na.fill({"ctx_cosine": 0.0})
 
         # (shared_prior already rides on the gated pairs — computed on all
         # blocked pairs before the cascade gate, which it co-determines)
