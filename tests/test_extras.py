@@ -343,29 +343,33 @@ def test_ann_ivf_empty_corpus(spark):
 
 
 def test_soft_tfidf_feature_duplicate_input_rows(spark):
-    """Duplicated (left, right) input rows must yield one score row per
-    distinct pair, so a caller's left-join back never multiplies rows
-    (ADVICE r3). ``soft_tfidf_feature(assume_distinct=False)`` owns the
-    dedup; both kernels are checked: the UDF kernel below the size gate
-    and the relational kernel called directly."""
-    from wned_spark.operators.scoring import soft_tfidf_feature, soft_tfidf_scores
+    """Duplicated (left, right) input rows come back once per input row,
+    each copy with the same score, and that score equals the one the
+    pair gets in the deduplicated input: ``soft_tfidf_feature`` adds
+    ``name_soft`` to the rows it is given, so no caller joins scores
+    back, and df counts distinct surfaces, so copies do not move idf."""
+    from wned_spark.operators.scoring import soft_tfidf_feature
 
+    dup = [("jon smith", "john smith")] * 3 + [("acme corp", "acme corporation")] * 2
     pairs = spark.createDataFrame(
-        [("jon smith", "john smith")] * 3 + [("acme corp", "acme corporation")] * 2,
-        "left_norm string, right_norm string",
+        [(i, a, b) for i, (a, b) in enumerate(dup)],
+        "row_id int, left_norm string, right_norm string",
     )
-    outs = [
-        soft_tfidf_feature(pairs, assume_distinct=False),
-        soft_tfidf_scores(pairs),
-    ]
-    scores = []
-    for out in outs:
-        rows = out.collect()
-        assert len(rows) == 2
-        scores.append({(r["left_norm"], r["right_norm"]): r["name_soft"] for r in rows})
-    assert scores[0].keys() == scores[1].keys()
-    for k, v in scores[0].items():
-        assert abs(v - scores[1][k]) < 1e-9, k
+    rows = soft_tfidf_feature(pairs).collect()
+    assert sorted(r["row_id"] for r in rows) == list(range(len(dup)))
+    scores = {}
+    for r in rows:
+        scores.setdefault((r["left_norm"], r["right_norm"]), set()).add(r["name_soft"])
+    assert all(len(v) == 1 for v in scores.values()), scores
+    distinct = spark.createDataFrame(sorted(set(dup)), "left_norm string, right_norm string")
+    once = {
+        (r["left_norm"], r["right_norm"]): r["name_soft"]
+        for r in soft_tfidf_feature(distinct).collect()
+    }
+    assert once.keys() == scores.keys()
+    for k, v in once.items():
+        assert scores[k] == {v}, (k, scores[k], v)
+    assert 0.0 < once[("jon smith", "john smith")] < 1.0
 
 
 def test_simhash_table_matches_column_spec(spark):

@@ -263,14 +263,80 @@ def test_milne_witten_range(spark):
     assert abs(out[(2, 4)] - 0.5) < 1e-12
 
 
-def test_soft_tfidf_relational_matches_udf(spark):
-    """The relational SoftTFIDF (one JW per distinct token pair,
-    executor-count-independent work) must reproduce the Arrow-UDF
-    kernel it replaced, including initial expansion, dotted initials,
-    duplicate tokens, and the theta gate."""
-    from pyspark.sql import functions as F
+def _soft_tfidf_oracle(pairs: list[tuple[str, str]], theta: float) -> dict:
+    """Plain-Python SoftTFIDF: exact idf ln(1 + N/df) over the distinct
+    surfaces of ``pairs``, no memo and no idf head cap. A single-letter
+    token aligns with a token of the other surface sharing its first
+    letter; a longer token never aligns with a single-letter one."""
+    import math
+    import re
 
-    from wned_spark.operators.scoring import make_soft_tfidf_udf, soft_tfidf_scores
+    from wned_spark.functions.similarity import jaro_winkler
+
+    def tokens(s):
+        return [t for t in re.split(r"[\s\.]+", s) if t]
+
+    surfaces = {s for pair in pairs for s in pair}
+    df = {}
+    for s in surfaces:
+        for t in set(tokens(s)):
+            df[t] = df.get(t, 0) + 1
+    idf = {t: math.log(1.0 + len(surfaces) / d) for t, d in df.items()}
+
+    def sim(t, b):
+        if len(t) == 1:
+            return 1.0 if t[0] == b[0] else 0.0
+        return 0.0 if len(b) == 1 else jaro_winkler(t, b)
+
+    def direction(ta, tb):
+        den = sum(idf[t] for t in ta)
+        best = [max([sim(t, b) for b in tb], default=0.0) for t in ta]
+        num = sum(idf[t] * x for t, x in zip(ta, best) if x >= theta)
+        return num / den if den else 0.0
+
+    return {
+        (a, b): max(direction(tokens(a), tokens(b)), direction(tokens(b), tokens(a)))
+        for a, b in pairs
+    }
+
+
+def test_soft_tfidf_matches_python_oracle(spark):
+    """``soft_tfidf_feature`` equals the plain-Python SoftTFIDF on
+    initial expansion, dotted initials, duplicate tokens and the theta
+    gate. Duplicated input rows are kept, and each gets its own, equal
+    score."""
+    from wned_spark.operators.scoring import soft_tfidf_feature
+
+    distinct = [
+        ("alice gardenbar", "a. gardenbar"),
+        ("alice gardenbar", "alice gardenbar"),
+        ("acme widgets", "acme widgets inc"),
+        ("john john smith", "john smith"),
+        ("q. zhu", "quinn zhu"),
+        ("foo bar", "zzz qqq"),
+        ("gardenbar", "gardenbar systems"),
+        ("intl bus machines", "ibm"),
+    ]
+    rows = distinct + [("jon smith", "john smith")] * 3 + [("acme widgets", "acme widgets inc")]
+    pairs = spark.createDataFrame(rows, "left_norm string, right_norm string")
+    want = _soft_tfidf_oracle(rows, ERConfig().soft_theta)
+    assert want[("alice gardenbar", "alice gardenbar")] == 1.0
+    assert want[("foo bar", "zzz qqq")] == 0.0
+    got = soft_tfidf_feature(pairs).collect()
+    assert sorted((r["left_norm"], r["right_norm"]) for r in got) == sorted(rows)
+    for r in got:
+        k = (r["left_norm"], r["right_norm"])
+        assert abs(r["name_soft"] - want[k]) < 1e-12, (k, r["name_soft"], want[k])
+
+
+def test_soft_tfidf_relational_matches_udf(spark):
+    """A relational SoftTFIDF, built here from DataFrame operators
+    (posexplode the tokens, join the token pairs, max per token, sum
+    per direction), equals the Arrow-UDF kernel ``soft_tfidf_feature``
+    on initial expansion, dotted initials, duplicate tokens and the
+    theta gate. Only the inner Jaro-Winkler is a UDF on both sides."""
+    from wned_spark.functions.similarity import jaro_winkler_udf
+    from wned_spark.operators.scoring import soft_tfidf_feature
 
     pairs = spark.createDataFrame(
         [
@@ -282,20 +348,65 @@ def test_soft_tfidf_relational_matches_udf(spark):
             ("foo bar", "zzz qqq"),
             ("gardenbar", "gardenbar systems"),
             ("intl bus machines", "ibm"),
+            ("jon smith", "john smith"),
+            ("acme corp", "acme corporation"),
         ],
         "left_norm string, right_norm string",
     )
-    udf = make_soft_tfidf_udf(pairs, theta=0.90)
-    want = {
-        (r["left_norm"], r["right_norm"]): r["v"]
-        for r in pairs.select(
-            "left_norm", "right_norm",
-            udf(F.col("left_norm"), F.col("right_norm")).alias("v"),
-        ).collect()
+    theta = ERConfig().soft_theta
+    surfaces = (
+        pairs.select(F.col("left_norm").alias("s"))
+        .union(pairs.select(F.col("right_norm").alias("s")))
+        .distinct()
+    )
+    n = surfaces.count()
+    toks = surfaces.select(
+        "s",
+        F.posexplode(F.filter(F.split("s", r"[\s\.]+"), lambda t: t != "")).alias("pos", "tok"),
+    )
+    idf = (
+        toks.select("s", "tok").distinct().groupBy("tok").agg(F.count("*").alias("df"))
+        .select("tok", F.log(1.0 + F.lit(float(n)) / F.col("df")).alias("idf"))
+    )
+    tw = toks.join(idf, "tok")
+    den = tw.groupBy("s").agg(F.sum("idf").alias("den")).withColumnRenamed("s", "sa")
+    ta = tw.select(F.col("s").alias("sa"), "pos", F.col("tok").alias("ta"), "idf")
+    tb = tw.select(F.col("s").alias("sb"), F.col("tok").alias("tb"))
+    directed = (
+        pairs.select(F.col("left_norm").alias("sa"), F.col("right_norm").alias("sb"))
+        .union(pairs.select(F.col("right_norm").alias("sa"), F.col("left_norm").alias("sb")))
+        .distinct()
+    )
+    sim = (
+        F.when(F.length("ta") == 1, (F.substring("ta", 1, 1) == F.substring("tb", 1, 1)).cast("double"))
+        .when(F.length("tb") == 1, F.lit(0.0))
+        .otherwise(jaro_winkler_udf(F.col("ta"), F.col("tb")))
+    )
+    best = (
+        directed.join(ta, "sa").join(tb, "sb").withColumn("sim", sim)
+        .groupBy("sa", "sb", "pos", "idf").agg(F.max("sim").alias("best"))
+    )
+    num = best.groupBy("sa", "sb").agg(
+        F.sum(F.when(F.col("best") >= theta, F.col("idf") * F.col("best")).otherwise(0.0)).alias("num")
+    )
+    dirs = {
+        (r["sa"], r["sb"]): r["v"]
+        for r in num.join(den, "sa").select("sa", "sb", (F.col("num") / F.col("den")).alias("v")).collect()
     }
+    want = {
+        (r["left_norm"], r["right_norm"]): max(
+            dirs[(r["left_norm"], r["right_norm"])], dirs[(r["right_norm"], r["left_norm"])]
+        )
+        for r in pairs.collect()
+    }
+    assert want[("foo bar", "zzz qqq")] == 0.0
+    assert abs(want[("alice gardenbar", "alice gardenbar")] - 1.0) < 1e-12
+    # partial alignments, so the idf weights reach the score
+    assert 0.0 < want[("jon smith", "john smith")] < 1.0
+    assert 0.0 < want[("acme corp", "acme corporation")] < 1.0
     got = {
         (r["left_norm"], r["right_norm"]): r["name_soft"]
-        for r in soft_tfidf_scores(pairs, theta=0.90).collect()
+        for r in soft_tfidf_feature(pairs).collect()
     }
     assert set(got) == set(want)
     for k in want:
@@ -308,31 +419,17 @@ def test_soft_tfidf_initial_rule_is_directional(spark):
     a full token never matches the other surface's initial. The
     symmetric rule let the surname "vergarbar" match the first-name
     initial of "v. barbarbar" (sim 1.0), which carried a cross-entity
-    match edge past the gate. Pinned on both kernels."""
-    from pyspark.sql import functions as F
-
-    from wned_spark.config import ERConfig
-    from wned_spark.operators.scoring import make_soft_tfidf_udf, soft_tfidf_scores
+    match edge past the gate."""
+    from wned_spark.operators.scoring import soft_tfidf_feature
 
     pairs = spark.createDataFrame(
         [("vergarbar", "v. barbarbar"), ("q.", "quinn"), ("q. zhu", "quinn zhu")],
         "left_norm string, right_norm string",
     )
-    udf = make_soft_tfidf_udf(pairs, theta=0.90)
-    kernels = {
-        "udf": {
-            (r["left_norm"], r["right_norm"]): r["v"]
-            for r in pairs.select(
-                "left_norm", "right_norm",
-                udf(F.col("left_norm"), F.col("right_norm")).alias("v"),
-            ).collect()
-        },
-        "relational": {
-            (r["left_norm"], r["right_norm"]): r["name_soft"]
-            for r in soft_tfidf_scores(pairs, theta=0.90).collect()
-        },
+    got = {
+        (r["left_norm"], r["right_norm"]): r["name_soft"]
+        for r in soft_tfidf_feature(pairs).collect()
     }
-    for name, got in kernels.items():
-        assert got[("vergarbar", "v. barbarbar")] < ERConfig().soft_gate, (name, got)
-        assert got[("q.", "quinn")] == 1.0, (name, got)
-        assert got[("q. zhu", "quinn zhu")] == 1.0, (name, got)
+    assert got[("vergarbar", "v. barbarbar")] < ERConfig().soft_gate, got
+    assert got[("q.", "quinn")] == 1.0, got
+    assert got[("q. zhu", "quinn zhu")] == 1.0, got

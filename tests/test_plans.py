@@ -58,30 +58,6 @@ def test_semi_join_stays_semi(spark):
     assert "LeftSemi" in plan, plan
 
 
-def test_soft_tfidf_relational_plan_shape(spark):
-    """The relational SoftTFIDF's token-pair expansion must be
-    generator-only (explode from split expressions — no join building
-    the |pairs|·t² intermediate) and must never plan a cartesian
-    product. r07: the shared small tables (sp / tpairs / tokidf / den /
-    sims) are pinned with local checkpoints — the final plan must read
-    them as RDD scans (the AQE cross-job exchange-reuse gap made each
-    reference re-run its chain otherwise), so the n_surf broadcast now
-    lives in the tokidf checkpoint's own query, not this plan."""
-    from pyspark.sql import functions as F
-
-    from wned_spark.operators.scoring import soft_tfidf_scores
-
-    pairs = spark.createDataFrame(
-        [("alice gardenbar", "a. gardenbar"), ("acme widgets", "acme widgets inc")],
-        "left_norm string, right_norm string",
-    )
-    df = soft_tfidf_scores(pairs)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    assert "Generate posexplode" in plan or "Generate explode" in plan, plan
-    assert "Scan ExistingRDD" in plan, plan  # pinned shared tables
-
-
 def test_pair_feature_kernels_plan_shape(spark):
     """The signature and context features are scored row-wise from
     per-surface vector tables: the pair rows only join the vector table

@@ -533,26 +533,31 @@ def test_ppr_auto_leaves_caller_edges_cached(spark):
 
 
 def _pair_features(spark, weights, sigs, pairs) -> dict:
-    """ctx_cosine, sig_cosine and sig_kl per pair, from long-form
-    context weights (sid, term, tfidf) and signatures (seed, node, rank)."""
+    """name_soft, ctx_cosine, sig_cosine and sig_kl per pair, from pair
+    rows (left_sid, right_sid, left_norm, right_norm), long-form context
+    weights (sid, term, tfidf) and signatures (seed, node, rank)."""
     from wned_spark.functions.similarity import sparse_vectors
     from wned_spark.operators.ppr import signature_features
+    from wned_spark.operators.scoring import soft_tfidf_feature
     from wned_spark.operators.tfidf import pairwise_cosine
 
     ctx = sparse_vectors(weights, "sid", "term", "tfidf", "ctx")
-    out = pairwise_cosine(signature_features(pairs, _sig_vectors(sigs)), ctx)
+    rows = soft_tfidf_feature(pairs)
+    out = pairwise_cosine(signature_features(rows, _sig_vectors(sigs)), ctx)
     return {
-        (r["left_sid"], r["right_sid"]): (r["ctx_cosine"], r["sig_cosine"], r["sig_kl"])
+        (r["left_sid"], r["right_sid"]):
+            (r["name_soft"], r["ctx_cosine"], r["sig_cosine"], r["sig_kl"])
         for r in out.collect()
     }
 
 
 def test_pair_features_bit_equal_across_plans(spark):
-    """ctx_cosine, sig_cosine and sig_kl are the same bits under two
-    physical plans of the same input: broadcast joins against shuffle
-    joins (autoBroadcastJoinThreshold=-1), one input partition in key
-    order against several in shuffled order. Every sum runs in vector
-    key order, so no float sum depends on the order rows arrive in."""
+    """name_soft, ctx_cosine, sig_cosine and sig_kl are the same bits
+    under two physical plans of the same input: broadcast joins against
+    shuffle joins (autoBroadcastJoinThreshold=-1), one input partition
+    in key order against several in shuffled order. Every sum runs in
+    vector key order or token order, so no float sum depends on the
+    order rows arrive in."""
     rng = random.Random(29)
     n_docs, n_terms = 24, 300
     weights, sigs = [], []
@@ -563,13 +568,21 @@ def test_pair_features_bit_equal_across_plans(spark):
             weights.append((d, f"t{t}", 10 ** rng.uniform(-3, 3)))
         for n_ in rng.sample(range(n_terms), rng.randint(20, 120)):
             sigs.append((d, n_, 10 ** rng.uniform(-6, 0)))
-    pairs = [(a, b) for a in range(n_docs + 2) for b in range(n_docs + 2) if a != b]
+    # surface names over a small vocabulary with near-miss spellings and
+    # initials, so tokens recur (idf varies) and JW crosses theta
+    vocab = ["gardenbar", "gardenbra", "vergarbar", "acme", "acmee", "widgets",
+             "systems", "quinn", "zhu", "g.", "v", "q."]
+    names = {d: " ".join(rng.choices(vocab, k=rng.randint(1, 4))) for d in range(n_docs + 2)}
+    pairs = [(a, b, names[a], names[b])
+             for a in range(n_docs + 2) for b in range(n_docs + 2) if a != b]
 
     def frames(rows_w, rows_s, rows_p, parts):
         return (
             spark.createDataFrame(rows_w, "sid long, term string, tfidf double").repartition(parts),
             spark.createDataFrame(rows_s, "seed long, node long, rank double").repartition(parts),
-            spark.createDataFrame(rows_p, "left_sid long, right_sid long").repartition(parts),
+            spark.createDataFrame(
+                rows_p, "left_sid long, right_sid long, left_norm string, right_norm string"
+            ).repartition(parts),
         )
 
     base = _pair_features(spark, *frames(sorted(weights), sorted(sigs), pairs, 1))
@@ -584,4 +597,5 @@ def test_pair_features_bit_equal_across_plans(spark):
     finally:
         spark.conf.set(key, prev)
     assert len(base) == len(pairs)
+    assert any(0.0 < v[0] < 1.0 for v in base.values())  # partial alignments
     assert base == other

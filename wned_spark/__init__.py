@@ -4,7 +4,7 @@ Re-expresses the capabilities of U-Alberta/wned (WNED, Guo & Barbosa,
 CIKM 2014; reference at /root/reference) as a distributed record-linkage
 pipeline over multi-turn transcript tables:
 
-- candidate generation via salted mention-token + MinHash-LSH blocking
+- candidate generation via salt-split mention-token + MinHash-LSH blocking
   (replacing the Lucene alias index, ``cs/CandidateSelectionLucene.java``)
 - pairwise scoring with Arrow-batched pandas UDFs + JVM-side expressions
   (string similarity family of ``utils/similarity/StringSim.java`` fused

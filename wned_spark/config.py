@@ -13,7 +13,9 @@ Constants pinned to the reference where the semantics carry over
 - Fuzzy-match gate: Jaro-Winkler >= 0.8 (``utils/CSUtils.java:53-78``).
 - ZeroKL constants: eps=1e-6, gamma=10 (``utils/similarity/VectorSimilarity.java:87-104``).
 - Rank combination weights: priorWeight=0.08, localWeight=0.1
-  (``el.config:20-23``; note the reference's MULTIPLY scheme silently
+  (``el.config:20-23``; localWeight ``el.config:22`` has no field of its
+  own, the local context feature's weight is ``feature_weights``'
+  ``ctx_cosine``; note the reference's MULTIPLY scheme silently
   falls back to LINEAR because the parser matches the string
   "MULTIPLE" — ``config/WNEDConfig.java:175`` — so LINEAR is what the
   shipped config actually runs, and LINEAR is our default).
@@ -38,10 +40,10 @@ class ERConfig:
     # .93 at J=.67 — strong enough that fuzzy recall no longer depends
     # on hot affix blocks (which drop_block_size removes at scale)
     shingle_size: int = 2
-    # token block keys with more rows than this are re-salted / dropped
+    # token block keys with more rows than this are salt-split / dropped
     # as uninformative (Zipf-head stopword-like tokens)
     max_block_size: int = 50
-    # keys hotter than this are DROPPED, not salted: a block key shared
+    # keys hotter than this are DROPPED, not salt-split: a block key shared
     # by hundreds of surfaces (Zipf-head tokens, common 4-char affixes)
     # is pure pair pollution — true variant pairs are carried by their
     # rare keys (surname token, MinHash bands). Salting covers the
@@ -91,7 +93,6 @@ class ERConfig:
     # calibration.
     rank_scheme: str = "LINEAR"
     prior_weight: float = 0.08  # el.config:21
-    local_weight: float = 0.10  # el.config:22
     # remaining mass goes to the semantic + name-string block
     match_threshold: float = 0.62
     # SoftTFIDF inner-match threshold (theta) and the decision gate on
@@ -108,12 +109,6 @@ class ERConfig:
     # the dictionary with no string-similarity precondition). Admission
     # only — the final match rule still decides.
     prior_gate: float = 0.30
-    # SoftTFIDF strategy gate: distinct surface pairs below this run
-    # the single-map-stage Arrow-UDF kernel (per-worker memo covers a
-    # dictionary-sized vocabulary); at or above it the relational
-    # kernel runs — one JW per distinct token pair corpus-wide, work
-    # independent of executor count (scoring.soft_tfidf_feature)
-    soft_relational_min_pairs: int = 50_000
     feature_weights: dict = field(
         default_factory=lambda: {
             # LINEAR rank combination generalized to the pair-scoring
@@ -156,6 +151,3 @@ class ERConfig:
 
     # --- connected components (G8) ---
     cc_max_iter: int = 20
-
-    # --- checkpointing ---
-    checkpoint_dir: str = "/tmp/wned_spark_checkpoints"

@@ -1032,7 +1032,7 @@ def r5_soft_tfidf_fuzzy(spark, sf_dir):
     DuckDB-oracled (round-2 verdict item 10): IDF-weighted directional
     token alignment where the inner similarity is normalized
     Levenshtein (1 - d/maxlen) gated at theta=0.6 — the same alignment
-    structure the flagship's ``make_soft_tfidf_udf`` runs with a
+    structure the flagship's ``scoring.soft_tfidf_feature`` runs with a
     Jaro-Winkler kernel (StringSim.java:105-160 / Cohen et al.
     SoftTFIDF). Pins the discriminative-feature semantics (per-token
     best-match, threshold gate, idf·sim credit, max over directions)

@@ -1,4 +1,4 @@
-"""Blocking: salted token keys + MinHash-LSH band keys (J2).
+"""Blocking: token keys with hot-key salting + MinHash-LSH band keys (J2).
 
 Replaces the reference's Lucene bigram fuzzy search
 (``AliasLuceneIndex.java:247-300``) with set-similarity blocking:
@@ -11,7 +11,7 @@ Replaces the reference's Lucene bigram fuzzy search
   same collision shape as the reference's bigram index probe, computed
   per-band directly (no signature materialization) so the whole key
   computation is ``num_hashes`` codegen'd array_min-transforms;
-- skew control (north rule: "salted mention-token blocking keys"):
+- skew control (salting of hot mention-token blocking keys):
   keys hotter than ``max_block_size`` are split into
   ``ceil(freq/max_block_size)`` deterministic sub-blocks, bounding any
   block's pair count; AQE skew-join splits residue at runtime.
@@ -121,9 +121,7 @@ def salt_hot_keys(keys: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
     )
 
 
-def candidate_surface_pairs(
-    surfaces: DataFrame, cfg: ERConfig = ERConfig(), salted: bool = True
-) -> DataFrame:
+def candidate_surface_pairs(surfaces: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
     """Blocked self-join over distinct surfaces → candidate pairs
     (left_sid < right_sid) carrying both normalized strings.
 
@@ -132,9 +130,7 @@ def candidate_surface_pairs(
     self-join over TWO copies of it (plus the salting join) costs
     multiple seconds of serial driver time; a flat LogicalRDD keeps the
     join plan small, and the keys are computed once instead of twice."""
-    keys = block_keys(surfaces, cfg)
-    if salted:
-        keys = salt_hot_keys(keys, cfg)
+    keys = salt_hot_keys(block_keys(surfaces, cfg), cfg)
     # the key table inherits the (small) surfaces hub's partitioning;
     # without a spread, key explosion + the self-join map side run in
     # those few tasks regardless of cluster width
@@ -161,9 +157,7 @@ def candidate_surface_pairs(
     )
 
 
-def candidate_pairs(
-    mentions: DataFrame, cfg: ERConfig = ERConfig(), salted: bool = True
-) -> DataFrame:
+def candidate_pairs(mentions: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
     """Mention-level candidate pairs (left_id < right_id) — derived
     from the surface-level pairs plus identical-surface mention pairs.
 
@@ -175,7 +169,7 @@ def candidate_pairs(
     m = mentions.select(
         "mention_id", F.xxhash64(F.col(key_col)).alias("sid"), F.col(key_col).alias("sn")
     )
-    spairs = candidate_surface_pairs(surfaces_of(mentions), cfg, salted)
+    spairs = candidate_surface_pairs(surfaces_of(mentions), cfg)
 
     cross = (
         spairs.join(m.select(F.col("sid").alias("left_sid"), F.col("mention_id").alias("lm")), "left_sid")

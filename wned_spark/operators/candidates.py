@@ -59,7 +59,7 @@ def select_candidates(
     # no broadcast hint: AQE broadcasts the dictionary automatically
     # when it fits under the threshold; a forced hint on a 10^8-row
     # alias table would OOM the driver instead of degrading to a
-    # (salted, AQE-skew-split) sort-merge join
+    # (AQE-skew-split) sort-merge join
     joined = mentions.join(
         alias_dict,
         mentions[key] == alias_dict["alias_norm"],

@@ -66,314 +66,41 @@ def string_features(surface_pairs: DataFrame, cfg: ERConfig = ERConfig()) -> Dat
     )
 
 
-def soft_tfidf_feature(
-    surface_pairs: DataFrame,
-    cfg: ERConfig = ERConfig(),
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """Size-gated SoftTFIDF strategy (same decision shape as
-    ``connected_components_auto``): below
-    ``cfg.soft_relational_min_pairs`` distinct pairs the Arrow-UDF
-    kernel runs — one map stage, no shuffles, and at dictionary scale
-    its per-worker memo covers the whole vocabulary; above it the
-    relational kernel (:func:`soft_tfidf_scores`) takes over, whose JW
-    work is one call per distinct token pair corpus-wide regardless of
-    partitioning. Both produce identical scores (parity-pinned).
-
-    Both branches add ``name_soft`` as a column to DISTINCT pair rows
-    (one row per (left, right)), so a caller's join back never
-    multiplies rows. The strategy probe is a BOUNDED count —
-    ``limit(gate+1).count()`` answers "are there at least ``gate``
-    distinct pairs" without scanning past the gate.
-    ``assume_distinct=True`` skips the dedup pass when the caller
-    already guarantees one row per pair (the pipeline's blocked pairs
-    are distinct by construction); the input rows are then returned
-    with every column they carry."""
-    pairs = (
-        surface_pairs
-        if assume_distinct
-        else surface_pairs.select("left_norm", "right_norm").distinct()
-    )
-    gate = cfg.soft_relational_min_pairs
-    if pairs.limit(gate + 1).count() < gate:
-        udf = make_soft_tfidf_udf(pairs, theta=cfg.soft_theta)
-        return pairs.withColumn("name_soft", udf(F.col("left_norm"), F.col("right_norm")))
-    return soft_tfidf_scores(pairs, theta=cfg.soft_theta, assume_distinct=True)
+# tokens whose idf soft_tfidf_feature pulls to the driver, highest df
+# first; every other token gets ln(1 + N), the idf of a df=1 token
+SOFT_IDF_HEAD = 500_000
 
 
-def soft_tfidf_scores(
-    surface_pairs: DataFrame, theta: float = 0.90, assume_distinct: bool = False
-) -> DataFrame:
-    """Relational SoftTFIDF over (left_norm, right_norm) pairs →
-    (left_norm, right_norm, name_soft); with ``assume_distinct=True``
-    the input rows keep every other column they carry.
+def soft_tfidf_feature(surface_pairs: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
+    """R5 SoftTFIDF (``StringSim.java:105-160``), added as column
+    ``name_soft`` to every row of ``surface_pairs`` (which carries
+    ``left_norm`` and ``right_norm``). Rows keep every column and their
+    multiplicity; a duplicated row gets the same score twice.
 
     soft(A,B) = max over directions of
         sum_{t in A, best(t,B) >= theta} idf(t) * best(t, B)
         / sum_{t in A} idf(t)
-    with best(t,B) = max over b in B of JW(t,b); a single-letter token
-    t matches any b sharing its first letter (initial expansion,
-    R10-lite), while a longer t never matches a single-letter b — the
-    rule runs from the initial's side only; idf(t) = ln(1 + N/df(t)),
-    df over distinct surfaces.
+    with best(t,B) = max over b in B of JW(t,b) and theta =
+    ``cfg.soft_theta``. A single-letter token of A matches any token of
+    B sharing its first letter (initial expansion, R10-lite); a longer A
+    token never matches a single-letter B token — the rule runs from
+    the initial's side only. idf(t) = ln(1 + N/df(t)), with df the
+    number of distinct surfaces of the pair set containing t. Each
+    direction sums in token order, so the score does not depend on the
+    plan.
 
-    SCALE DESIGN — this replaced an Arrow-batched per-pair UDF with a
-    per-worker (token, token) JW memo. The memo version anti-scaled:
-    its cache was private to each of E×C python workers, so the same
-    Zipf-head token comparisons were recomputed in every partition and
-    aggregate work GREW with executor count (measured 77 task-seconds
-    at 2 executors → 762 at 8 for the same input). Here the Zipf dedup
-    is GLOBAL and explicit: the JW UDF runs once per DISTINCT
-    token-type pair in the whole pair set, every other step is
-    joins/groupBys that Catalyst plans and AQE sizes. Also removes the
-    old bounded driver vocabulary pull — idf stays distributed.
-    """
-    sp = (
-        surface_pairs
-        if assume_distinct
-        else surface_pairs.select("left_norm", "right_norm").distinct()
-    )
-    # the token-pair expansion below is map-side over sp's partitions
-    # and multiplies rows ~tₗ·tᵣ×; a byte-sized (often AQE-coalesced)
-    # sp would run that CPU work in a handful of tasks.
-    # r07: pinned + forced ONCE — sp is referenced from five subtrees
-    # (surface union ×2, both direction expansions, the final join),
-    # and under AQE each subtree lands in its own job, so exchange
-    # reuse never fires across them: the UI showed SEVEN 32-task stages
-    # re-running this repartition per call (guide §2.4/§7.1). One
-    # bounded materialization serves them all from cache.
-    sp = sp.repartition(
-        2 * surface_pairs.sparkSession.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=False)
-    sp.count()
-    surfaces = (
-        sp.select(F.col("left_norm").alias("s"))
-        .union(sp.select(F.col("right_norm").alias("s")))
-        .distinct()
-    )
-
-    def _toks(col):
-        # array_remove == lambda filter (drops every ''), non-HOF
-        return F.array_remove(F.split(col, r"[\s\.]+"), "")
-
-    inst = surfaces.select(
-        "s", F.posexplode(_toks(F.col("s"))).alias("pos", "tok")
-    )
-    # fused distinct-count (one exchange instead of distinct + groupBy)
-    dfreq = inst.groupBy("tok").agg(F.countDistinct("s").alias("df"))
-    n_df = surfaces.agg(F.count("*").cast("double").alias("n_surf"))
-    # r07: tokidf and den are VOCABULARY-/DICTIONARY-sized tables whose
-    # lineages (surface union-distinct → explode → aggregates) are the
-    # expensive part — and each is referenced from more than one branch
-    # of the final plan (tokidf: num join + den build; den: both
-    # direction joins). Un-materialized, Catalyst re-derives those
-    # chains per reference (guide §2.4) — measured 22 s → 9 s for the
-    # whole kernel over 89k pairs from pinning the three small shared
-    # tables (tokidf / den / sims) with lazy local checkpoints.
-    tokidf = dfreq.crossJoin(F.broadcast(n_df)).select(
-        "tok", F.log(1.0 + F.col("n_surf") / F.col("df")).alias("idf")
-    ).localCheckpoint(eager=False)
-    # denominator = Σ idf over a surface's token instances — depends on
-    # the SURFACE alone, so it is a 1-row-per-surface table joined at
-    # the very end, never carried through the token-pair expansion
-    den = (
-        inst.join(tokidf, "tok")
-        .groupBy("s")
-        .agg(F.sum("idf").alias("den"))
-    ).localCheckpoint(eager=False)
-
-    # Token-pair expansion is PURE MAP-SIDE: a pair row self-contains
-    # both strings, so both token lists come from split() expressions —
-    # the |pairs|·tₗ·tᵣ intermediate never rides a join or shuffle.
-    def _expand(pos_side: str, other_side: str, direction: int) -> DataFrame:
-        return sp.select(
-            "left_norm",
-            "right_norm",
-            F.lit(direction).alias("dir"),
-            F.posexplode(_toks(F.col(pos_side))).alias("pos_a", "tok_a"),
-        ).select(
-            "left_norm", "right_norm", "dir", "pos_a", "tok_a",
-            F.explode(_toks(F.col(other_side))).alias("tok_b"),
-        )
-
-    tp_l = _expand("left_norm", "right_norm", 0)
-
-    # ONE JW evaluation per distinct token-type pair corpus-wide (the
-    # global Zipf dedup), THETA-FILTERED before joining back: tokens
-    # whose best match is below theta contribute nothing to the
-    # numerator, so dropping sub-theta sims up front shrinks the
-    # aggregated rows by ~10× without changing any score. JW is
-    # symmetric, so the same sims table serves both directions.
-    # distinct token pairs are byte-light (~tens of bytes/row) but the
-    # JW UDF is CPU-heavy: AQE's size-based coalescing would run it in
-    # 1-4 tasks regardless of cluster width — spread it explicitly
-    tpairs = tp_l.select("tok_a", "tok_b")
-    # r07 LENGTH-RATIO PREFILTER (exact, guide §2.3 "don't compute what
-    # you throw away"): only sims >= theta survive the filter below, and
-    # JW admits a provable upper bound from lengths alone — with
-    # m <= s := least(l_a, l_b) matches and transpositions >= 0,
-    # jaro <= (s/l_a + s/l_b + 1)/3 <= (2 + s/L)/3 (L := greatest), and
-    # the Winkler boost (prefix <= 4, scale 0.1) gives
-    # jw <= 0.6*jaro + 0.4. So jw >= theta requires
-    # s/L >= 5*theta - 4 (= 0.5 at the default theta 0.9): a token pair
-    # failing that can NEVER pass the theta filter, and dropping it
-    # before the distinct+UDF changes no score. Single-letter tokens are
-    # exempt (they take the first-letter rule, not JW).
-    ratio_min = 5.0 * theta - 4.0
-    if ratio_min > 0.0:
-        one_letter = (F.length("tok_a") == 1) | (F.length("tok_b") == 1)
-        tpairs = tpairs.filter(
-            one_letter
-            | (
-                F.least(F.length("tok_a"), F.length("tok_b"))
-                >= ratio_min * F.greatest(F.length("tok_a"), F.length("tok_b"))
-            )
-        )
-    # r07 PYTHON-BOUNDARY CUT (guide §4.1): a Python UDF inside a CASE
-    # branch is extracted into an ArrowEvalPython projection that runs
-    # on EVERY row — the old when/otherwise paid the JW boundary for the
-    # single-letter rows too. Split the frame instead: the cheap cases
-    # (single-letter first-letter rule, and equal tokens where
-    # JW(x,x) == 1.0 identically — the Zipf-head diagonal) stay in
-    # codegen, and only genuinely-hard pairs cross into Python. The
-    # checkpoint pins the distinct output so the branches share it
-    # instead of re-deriving the exchange.
-    tpairs = tpairs.distinct().localCheckpoint(eager=False)
-    # WORK-ADAPTIVE width for the JW stage (guide §2.2/§2.5): the JW
-    # kernel is ~7 µs per pair while every extra ArrowEvalPython task
-    # costs ~12 ms of Python-boundary round-trip (measured: the same
-    # 89k pairs take 0.44 s in 8 tasks and 1.83 s in 128) — so size
-    # the stage by rows of work per task (~50k ≈ 0.4 s of kernel each),
-    # capped at 2× core count so a dictionary-scale pair set still
-    # uses the whole cluster. The count is a bounded job over the
-    # checkpointed id-pair table and doubles as its materialization.
-    n_tp = tpairs.count()
-    width = max(1, min(2 * sp.sparkSession.sparkContext.defaultParallelism,
-                       -(-n_tp // 50_000)))
-    one_letter = (F.length("tok_a") == 1) | (F.length("tok_b") == 1)
-    cheap_case = one_letter | (F.col("tok_a") == F.col("tok_b"))
-    sims_cheap = tpairs.filter(cheap_case).select(
-        "tok_a",
-        "tok_b",
-        F.when(
-            one_letter,
-            (F.substring("tok_a", 1, 1) == F.substring("tok_b", 1, 1)).cast("double"),
-        )
-        .otherwise(F.lit(1.0))
-        .alias("sim"),
-    )
-    sims_hard = tpairs.filter(~cheap_case).repartition(width).select(
-        "tok_a",
-        "tok_b",
-        jaro_winkler_udf(F.col("tok_a"), F.col("tok_b")).alias("sim"),
-    )
-    # theta-filtered sims are O(matching token types) — tiny; pinned so
-    # the symmetric column-swap union reads it instead of re-running
-    # the JW projection twice. The materialization is FORCED here (one
-    # bounded job over the token-pair table): a lazy checkpoint's cache
-    # only serves hits after a partition completes, so the final plan's
-    # two cold references (the union's branches can be scheduled
-    # concurrently) each re-ran the whole ArrowEvalPython chain —
-    # measured 12.5 s → ~6 s for the kernel over 89k pairs from this
-    # one barrier (the round-3 cold-persist race, inside one action).
-    sims = (
-        sims_cheap.union(sims_hard)
-        .filter(F.col("sim") >= theta)
-        .localCheckpoint(eager=False)
-    )
-    sims.count()
-
-    # r07 FUSED DIRECTIONS (guide §2.4): both directional scores ride
-    # ONE matched-join → best-groupBy → idf-join → num-groupBy chain
-    # keyed by a dir tag, instead of running the whole pyramid twice —
-    # at dictionary scale the two directions' aggregates share every
-    # exchange, and locally it halves the serial AQE stage count of the
-    # pipeline's hottest stage. The sims table serves direction 1 by a
-    # column swap UNIONED in (JW is symmetric; a duplicated (a,a) row
-    # from the union is harmless under the max aggregate). Per-group
-    # addends are unchanged, so scores equal the two-pass form (pinned
-    # against the UDF kernel in tests/test_operators.py).
-    tp_all = tp_l.union(_expand("right_norm", "left_norm", 1))
-    # the initial rule is directional: a full A token never aligns with
-    # a single-letter B token (a surname must not match the other
-    # name's first-name initial)
-    sims_sym = sims.union(
-        sims.select(F.col("tok_b").alias("tok_a"), F.col("tok_a").alias("tok_b"), "sim")
-    ).filter((F.length("tok_a") == 1) | (F.length("tok_b") > 1))
-    matched = tp_all.join(sims_sym, ["tok_a", "tok_b"])
-    best = matched.groupBy("left_norm", "right_norm", "dir", "pos_a", "tok_a").agg(
-        F.max("sim").alias("best")
-    )
-    # direction pivot fused into ONE (left, right) aggregation: the two
-    # per-direction numerators are conditional sums over the same rows
-    # (sum skips the other direction's nulls), so the old
-    # groupBy(l,r,dir) → per-direction den join → groupBy(l,r) chain
-    # collapses to one exchange + two broadcast den joins
-    num = (
-        best.join(tokidf, best["tok_a"] == tokidf["tok"])
-        .groupBy("left_norm", "right_norm")
-        .agg(
-            F.sum(
-                F.when(F.col("dir") == 0, F.col("idf") * F.col("best"))
-            ).alias("num_l"),
-            F.sum(
-                F.when(F.col("dir") == 1, F.col("idf") * F.col("best"))
-            ).alias("num_r"),
-        )
-    )
-    den_l = den.select(F.col("s").alias("left_norm"), F.col("den").alias("den_l"))
-    den_r = den.select(F.col("s").alias("right_norm"), F.col("den").alias("den_r"))
-    # left joins + null-safe whens: a direction with no matched tokens
-    # (null num) or a token-less surface (no den row) scores 0, exactly
-    # like the old per-direction inner join + outer coalesce
-    scored_pairs = (
-        num.join(den_l, "left_norm", "left")
-        .join(den_r, "right_norm", "left")
-        .select(
-            "left_norm",
-            "right_norm",
-            F.greatest(
-                F.coalesce(
-                    F.when(F.col("den_l") > 0, F.col("num_l") / F.col("den_l")),
-                    F.lit(0.0),
-                ),
-                F.coalesce(
-                    F.when(F.col("den_r") > 0, F.col("num_r") / F.col("den_r")),
-                    F.lit(0.0),
-                ),
-            ).alias("name_soft"),
-        )
-    )
-    return sp.join(scored_pairs, ["left_norm", "right_norm"], "left").withColumn(
-        "name_soft", F.coalesce("name_soft", F.lit(0.0))
-    )
-
-
-def make_soft_tfidf_udf(
-    surface_pairs: DataFrame, theta: float = 0.9, max_vocab: int = 500_000
-):
-    """Build an Arrow-batched SoftTFIDF UDF with IDF weights computed
-    from the distinct surfaces of the pair set.
-
-    soft(A,B) = max over directions of
-        sum_{t in A, best_jw(t,B) >= theta} idf(t) * best_jw(t, B)
-        / sum_{t in A} idf(t)
-    A single-letter token of A matches any token of B sharing its
-    first letter (initial expansion, R10-lite); a longer A token never
-    matches a single-letter B token. idf(t) = ln(1 + N/df(t)) with df =
-    number of distinct surfaces containing t.
-
-    THE DRIVER PULL IS BOUNDED: only the ``max_vocab`` highest-df
-    tokens collect (one top-K, not the whole vocabulary — a
-    misspelling-heavy multilingual corpus can make distinct name tokens
-    O(distinct surfaces)). Every token outside the pulled head gets
-    ``default_idf = ln(1 + N)`` — EXACTLY the idf of a df=1 token, so
-    the cap is lossless for the singleton tail and only approximates
-    the middle of the Zipf curve, where idf varies slowly.
-    """
+    One action pulls the idf head and N to the driver. The pull is
+    bounded: only the ``SOFT_IDF_HEAD`` highest-df tokens collect (a
+    misspelling-heavy corpus can make distinct name tokens
+    O(distinct surfaces)). Every other token gets ``ln(1 + N)`` —
+    exactly the idf of a df=1 token, so the cap is lossless for the
+    singleton tail and only approximates the middle of the Zipf curve,
+    where idf varies slowly. The scores are then one Arrow-batched UDF
+    projection: a map stage with no shuffle."""
     import math
     import re
 
+    theta = cfg.soft_theta
     surfaces = (
         surface_pairs.select(F.col("left_norm").alias("s"))
         .union(surface_pairs.select(F.col("right_norm").alias("s")))
@@ -387,7 +114,7 @@ def make_soft_tfidf_udf(
         toks.groupBy("tok")
         .agg(F.count("*").alias("df"))  # rows are distinct (s, tok) already
         .orderBy(F.desc("df"), F.asc("tok"))
-        .limit(max_vocab)
+        .limit(SOFT_IDF_HEAD)
     )
     # ONE action returns the idf head and N (the one-row surface count
     # left-joined to the head, so an empty head still yields N)
@@ -447,7 +174,9 @@ def make_soft_tfidf_udf(
             out[i] = max(_direction(ta, tb), _direction(tb, ta))
         return pd.Series(out)
 
-    return soft_tfidf
+    return surface_pairs.withColumn(
+        "name_soft", soft_tfidf(F.col("left_norm"), F.col("right_norm"))
+    )
 
 
 def sum_normalize_per_group(

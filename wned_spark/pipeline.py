@@ -75,7 +75,13 @@ def run_er_pipeline(
     nil_model=None,
 ) -> PipelineResult:
     """Run the full ER pipeline. With a ``catalog``, every stage is a
-    committed resumable snapshot; without, stages persist in memory."""
+    committed resumable snapshot; without, stages persist in memory.
+
+    ``use_signatures=False`` is an ablation (no PPR signature features),
+    not a supported configuration: the PPR features carry the precision.
+    On perfbench's ``er_small`` corpus it scores blocked F1 0.986
+    (precision 0.973, recall 1.0), below the 0.99 gate the default
+    configuration passes."""
 
     @contextmanager
     def described(name: str):
@@ -277,9 +283,7 @@ def run_er_pipeline(
         # those surfaces upstream). Every later pair table is a row-wise
         # extension or a projection of these rows, so stays distinct.
         feats = stage(
-            "surface_soft",
-            lambda: scoring.soft_tfidf_feature(pairs, cfg, assume_distinct=True),
-            "lazy",
+            "surface_soft", lambda: scoring.soft_tfidf_feature(pairs, cfg), "lazy"
         )
 
         # ---- prior feature via alias dictionary at surface level (J1/A2) ----
