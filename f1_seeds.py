@@ -5,9 +5,9 @@ For each seed, ``run_er_pipeline`` runs in memory with the default
 ``ERConfig`` on ``generate_corpus(400 conversations x 12 turns,
 64 entities, community_size=8, seed)``, the corpus of perfbench's
 ``er_small`` under another generator seed. Its mention clusters are
-scored against gold over ALL gold mention pairs, counted through the
-cluster x entity table (``perfbench/checks.pairwise_prf``), not only
-over the blocked pairs that ``PipelineResult.metrics`` counts.
+scored against gold over ALL gold mention pairs by
+``evaluate.contingency_prf``, which counts through the cluster x entity
+table.
 
     python f1_seeds.py --seeds 1-60 --out F1_SEEDS.json
 
@@ -38,11 +38,9 @@ def main() -> None:
     ap.add_argument("--out", default="F1_SEEDS.json")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from perfbench.checks import pairwise_prf
     from wned_spark.config import ERConfig
     from wned_spark.datagen import generate_corpus
+    from wned_spark.operators.evaluate import contingency_prf
     from wned_spark.pipeline import run_er_pipeline
     from wned_spark.session import DEFAULT_CPUS, get_spark
 
@@ -61,16 +59,10 @@ def main() -> None:
         transcripts.count()
         t0 = time.time()
         res = run_er_pipeline(spark, transcripts, alias_raw=c["alias_raw"], cfg=ERConfig())
-        predicted = {r[0]: r[1] for r in res.clusters.collect()}
+        clusters = res.clusters.localCheckpoint()
         wall = time.time() - t0
-        gold = {
-            r[0]: r[1]
-            for r in c["gold_mentions"].select(
-                F.xxhash64("conv_id", "turn_idx", "start"), "entity_id"
-            ).collect()
-        }
-        prf = pairwise_prf(predicted, gold)
-        row = {"seed": seed, "mentions": len(gold), "wall_s": round(wall, 2),
+        prf = contingency_prf(clusters, c["gold_mentions"])
+        row = {"seed": seed, "mentions": c["gold_mentions"].count(), "wall_s": round(wall, 2),
                **{k: prf[k] for k in ("precision", "recall", "f1")}}
         print(json.dumps(row), flush=True)
         rows.append(row)

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 from wned_spark.config import ERConfig
 from wned_spark.datagen import generate_corpus
 from wned_spark.operators import l2r
+from wned_spark.operators.evaluate import contingency_prf
 from wned_spark.pipeline import run_er_pipeline
 from wned_spark.plans.catalog import Catalog
 
@@ -38,11 +39,11 @@ def test_l2r_end_to_end_holds_f1_gate(spark):
 
     test = _corpus(spark, seed=11)
     res = run_er_pipeline(
-        spark, test["transcripts"], alias_raw=test["alias_raw"],
-        gold_mentions=test["gold_mentions"], cfg=cfg, ranker=model,
+        spark, test["transcripts"], alias_raw=test["alias_raw"], cfg=cfg, ranker=model,
     )
     assert "l2r_margin" in res.scored.columns
-    assert res.metrics["f1"] >= 0.99, res.metrics
+    prf = contingency_prf(res.clusters, test["gold_mentions"])
+    assert prf["f1"] >= 0.99, prf
 
 
 def test_l2r_training_deterministic(spark):
@@ -112,7 +113,7 @@ def test_nil_head_gate_holds_f1_and_is_deterministic(spark):
 
     # config-selectable in the pipeline: nil_model replaces the threshold
     res = run_er_pipeline(
-        spark, c["transcripts"], alias_raw=c["alias_raw"],
-        gold_mentions=c["gold_mentions"], cfg=ERConfig(), nil_model=head1,
+        spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig(), nil_model=head1,
     )
-    assert res.metrics["f1"] >= 0.99, res.metrics
+    prf = contingency_prf(res.clusters, c["gold_mentions"])
+    assert prf["f1"] >= 0.99, prf

@@ -1,15 +1,18 @@
 """End-to-end gates: pairwise F1 >= 0.99 (BASELINE.json metric), per-turn
 text-equality invariant, and catalog resume semantics."""
 
+import importlib.util
 import json
 import os
 import threading
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
 
 from wned_spark.config import ERConfig
 from wned_spark.datagen import generate_corpus
+from wned_spark.operators.evaluate import contingency_prf
 from wned_spark.pipeline import run_er_pipeline
 from wned_spark.plans.catalog import Catalog
 
@@ -49,54 +52,60 @@ def _job_description(spark) -> str:
     ).collect()[0]
 
 
-def _contingency_prf(clusters, gold_mentions) -> dict:
-    """Pairwise P/R/F1 over ALL gold mention pairs, counted linearly
-    from the cluster x entity table: with n_ij the mentions of cluster
-    i and entity j, tp = sum C(n_ij, 2), predicted pairs and gold pairs
-    are the same sum over the row and the column totals. A gold
-    mention with no cluster counts as a singleton."""
-    gold = gold_mentions.select(
-        F.xxhash64("conv_id", "turn_idx", "start").alias("mention_id"), "entity_id"
-    ).distinct()
-    cells = (
-        gold.join(clusters.select("mention_id", "cluster_id"), "mention_id", "left")
-        .select(
-            F.coalesce(
-                F.col("cluster_id").cast("string"),
-                F.concat(F.lit("missing:"), F.col("mention_id").cast("string")),
-            ).alias("cluster"),
-            "entity_id",
-        )
-        .groupBy("cluster", "entity_id")
-        .count()
-        .collect()
+def _benchmark_checks():
+    """``perfbench/checks.py``, loaded by path: the metric the benchmark
+    scores the flagship with, apart from the package."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_checks", Path(__file__).resolve().parent.parent / "perfbench" / "checks.py"
     )
-    rows: dict = {}
-    cols: dict = {}
-    tp = 0
-    for r in cells:
-        n = r["count"]
-        tp += n * (n - 1) // 2
-        rows[r["cluster"]] = rows.get(r["cluster"], 0) + n
-        cols[r["entity_id"]] = cols.get(r["entity_id"], 0) + n
-    pred = sum(n * (n - 1) // 2 for n in rows.values())
-    true = sum(n * (n - 1) // 2 for n in cols.values())
-    p = tp / pred if pred else 1.0
-    r = tp / true if true else 1.0
-    return {"precision": p, "recall": r, "f1": 2 * p * r / (p + r) if p + r else 0.0}
+    checks = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(checks)
+    return checks
 
 
-def test_e2e_pairwise_f1_gate(spark, monkeypatch):
+def _assert_same_counts(prf: dict, bench: dict) -> None:
+    assert (prf["tp"], prf["tp"] + prf["fp"], prf["tp"] + prf["fn"], prf["missing"]) == (
+        bench["tp"], bench["predicted_pairs"], bench["gold_pairs"], bench["missing"]
+    ), (prf, bench)
+
+
+def test_contingency_prf_matches_benchmark_metric(spark):
+    """Hand-built clustering with one merge (entities 1 and 2 share
+    cluster 10), one split (entity 3 over clusters 30 and 31) and one
+    gold mention with no cluster: the package metric and the
+    benchmark's count agree on every pair count."""
+    gold_rows = [  # (conv_id, turn_idx, start, entity_id)
+        ("a", 0, 0, 1), ("a", 0, 5, 1), ("a", 1, 0, 2), ("a", 1, 5, 2),
+        ("b", 0, 0, 3), ("b", 0, 5, 3), ("b", 1, 0, 3), ("b", 1, 5, 3),
+        ("c", 0, 0, 4), ("c", 0, 5, 4),
+    ]
+    cluster_of = [10, 10, 10, 10, 30, 30, 31, 31, 40, None]
+    gold = spark.createDataFrame(gold_rows, "conv_id string, turn_idx int, start int, entity_id long")
+    keyed = gold.select(F.xxhash64("conv_id", "turn_idx", "start").alias("mid"), "entity_id").collect()
+    clusters = spark.createDataFrame(
+        [(r["mid"], c) for r, c in zip(keyed, cluster_of) if c is not None],
+        "mention_id long, cluster_id long",
+    )
+    prf = contingency_prf(clusters, gold)
+    bench = _benchmark_checks().pairwise_prf(
+        {r["mid"]: c for r, c in zip(keyed, cluster_of) if c is not None},
+        {r["mid"]: r["entity_id"] for r in keyed},
+    )
+    _assert_same_counts(prf, bench)
+    # predicted C(4,2) + 2 C(2,2) = 8, gold 1 + 1 + 6 + 1 = 9, tp 4 cells of 2
+    assert (prf["tp"], prf["fp"], prf["fn"], prf["missing"]) == (4, 4, 5, 1)
+    assert prf["f1"] == pytest.approx(bench["f1"])
+
+
+@pytest.mark.parametrize("seed", [42, 1, 22])
+def test_e2e_pairwise_f1_gate(spark, monkeypatch, seed):
     cancels = _record_cancels(monkeypatch, spark)
     c = generate_corpus(spark, n_conversations=40, turns_per_conv=10,
-                        n_entities=32, community_size=8)
+                        n_entities=32, community_size=8, seed=seed)
     c["transcripts"] = c["transcripts"].cache()
-    c["gold_mentions"] = c["gold_mentions"].cache()
-    res = run_er_pipeline(
-        spark, c["transcripts"], alias_raw=c["alias_raw"],
-        gold_mentions=c["gold_mentions"], cfg=ERConfig(),
-    )
-    assert res.metrics["f1"] >= 0.99, res.metrics
+    res = run_er_pipeline(spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig())
+    prf = contingency_prf(res.clusters, c["gold_mentions"])
+    assert prf["f1"] >= 0.99, prf
     # every hub-pool stage resolved, so the pool's job group is left
     # alone (cancelling a group with no active jobs logs a warning)
     assert cancels == []
@@ -188,26 +197,23 @@ def test_e2e_adversarial_regime_gate(spark):
     c["transcripts"] = c["transcripts"].cache()
     c["gold_mentions"] = c["gold_mentions"].cache()
 
-    res = run_er_pipeline(
-        spark, c["transcripts"], alias_raw=c["alias_raw"],
-        gold_mentions=c["gold_mentions"], cfg=ERConfig(),
-    )
-    assert res.metrics["f1"] >= 0.99, res.metrics
+    res = run_er_pipeline(spark, c["transcripts"], alias_raw=c["alias_raw"], cfg=ERConfig())
+    prf = contingency_prf(res.clusters, c["gold_mentions"])
+    assert prf["f1"] >= 0.99, prf
 
     res_off = run_er_pipeline(
         spark, c["transcripts"], alias_raw=c["alias_raw"],
-        gold_mentions=c["gold_mentions"],
         cfg=dataclasses.replace(ERConfig(), use_pattern_defs=False),
     )
-    assert res_off.metrics["f1"] < 0.99, res_off.metrics
+    prf_off = contingency_prf(res_off.clusters, c["gold_mentions"])
+    assert prf_off["f1"] < 0.99, prf_off
 
 
 def test_e2e_contingency_f1_seed1(spark):
     """Contingency F1 over all gold mention pairs on generator seed 1,
     where the symmetric SoftTFIDF initial rule merged "Vera Barbarbar"
-    with "Xenia Vergarbar" (F1 0.985). The blocked-pair metric of
-    ``run_er_pipeline`` cannot see a merge across blocks; this count
-    can."""
+    with "Xenia Vergarbar" (F1 0.985), a merge across blocks. The
+    package metric counts the same pairs as the benchmark's."""
     c = generate_corpus(spark, n_conversations=400, turns_per_conv=12,
                         n_entities=64, community_size=8, seed=1)
     c["transcripts"] = c["transcripts"].cache()
@@ -222,8 +228,16 @@ def test_e2e_contingency_f1_seed1(spark):
     # scored row-wise from vector tables and the mentions hub reports
     # its real size. The budget allows 5 of run-to-run scheduling spread
     assert n_jobs <= 90, n_jobs
-    prf = _contingency_prf(res.clusters, c["gold_mentions"])
+    prf = contingency_prf(res.clusters, c["gold_mentions"])
     assert prf["f1"] >= 0.99, prf
+    pred = {r["mention_id"]: r["cluster_id"] for r in res.clusters.collect()}
+    gold = {
+        r[0]: r[1]
+        for r in c["gold_mentions"].select(
+            F.xxhash64("conv_id", "turn_idx", "start"), "entity_id"
+        ).collect()
+    }
+    _assert_same_counts(prf, _benchmark_checks().pairwise_prf(pred, gold))
     c["transcripts"].unpersist()
 
 

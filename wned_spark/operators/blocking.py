@@ -155,41 +155,3 @@ def candidate_surface_pairs(surfaces: DataFrame, cfg: ERConfig = ERConfig()) -> 
             "right_sid",
         )
     )
-
-
-def candidate_pairs(mentions: DataFrame, cfg: ERConfig = ERConfig()) -> DataFrame:
-    """Mention-level candidate pairs (left_id < right_id) — derived
-    from the surface-level pairs plus identical-surface mention pairs.
-
-    Used by the EVALUATION harness (the F5 labeled-pairs set) and tests;
-    the production pipeline clusters surfaces directly and never
-    materializes this quadratic expansion.
-    """
-    key_col = "canon_norm" if "canon_norm" in mentions.columns else "surface_norm"
-    m = mentions.select(
-        "mention_id", F.xxhash64(F.col(key_col)).alias("sid"), F.col(key_col).alias("sn")
-    )
-    spairs = candidate_surface_pairs(surfaces_of(mentions), cfg)
-
-    cross = (
-        spairs.join(m.select(F.col("sid").alias("left_sid"), F.col("mention_id").alias("lm")), "left_sid")
-        .join(m.select(F.col("sid").alias("right_sid"), F.col("mention_id").alias("rm")), "right_sid")
-        .select(
-            F.least("lm", "rm").alias("left_id"),
-            F.greatest("lm", "rm").alias("right_id"),
-            F.when(F.col("lm") < F.col("rm"), F.col("left_norm")).otherwise(F.col("right_norm")).alias("left_norm"),
-            F.when(F.col("lm") < F.col("rm"), F.col("right_norm")).otherwise(F.col("left_norm")).alias("right_norm"),
-        )
-    )
-    a, b = m.alias("a"), m.alias("b")
-    same = (
-        a.join(b, "sid")
-        .filter(F.col("a.mention_id") < F.col("b.mention_id"))
-        .select(
-            F.col("a.mention_id").alias("left_id"),
-            F.col("b.mention_id").alias("right_id"),
-            F.col("a.sn").alias("left_norm"),
-            F.col("b.sn").alias("right_norm"),
-        )
-    )
-    return cross.union(same).distinct()

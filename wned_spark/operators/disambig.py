@@ -33,32 +33,28 @@ from wned_spark.config import ERConfig
 from wned_spark.operators import ppr
 
 
-def ambiguous_surfaces(cands: DataFrame) -> DataFrame:
-    """Surfaces whose candidate set spans >1 entity: (sid). cands:
-    (sid, entity_id, source, prior) from candidates.select_candidates."""
-    return (
-        cands.groupBy("sid")
-        .agg(F.countDistinct("entity_id").alias("n_ents"))
-        .filter(F.col("n_ents") > 1)
-        .select("sid")
+def entity_rep_surfaces(cands: DataFrame) -> DataFrame:
+    """Every candidate row (sid, entity_id, source, prior) of
+    candidates.select_candidates with two columns: ``ambiguous``, true
+    when the row's surface has >1 candidate entity, and ``rep_sid``, the
+    entity's highest-prior NON-ambiguous surface present in the corpus
+    (deterministic tiebreak on sid), null when every surface of the
+    entity is ambiguous. Two windows and no join: the flag is min != max
+    over the surface's rows, and non-ambiguous rows sort first in the
+    entity's window, so its first non-null sid is the representative."""
+    by_sid = Window.partitionBy("sid")
+    by_ent = Window.partitionBy("entity_id").orderBy("ambiguous", F.desc("prior"), F.asc("sid"))
+    return cands.withColumn(
+        "ambiguous", F.min("entity_id").over(by_sid) != F.max("entity_id").over(by_sid)
+    ).withColumn(
+        "rep_sid", F.first(F.when(~F.col("ambiguous"), F.col("sid")), ignorenulls=True).over(by_ent)
     )
 
 
-def entity_rep_surfaces(cands: DataFrame, amb: DataFrame) -> DataFrame:
-    """(entity_id, rep_sid): for every candidate entity of an ambiguous
-    surface, its highest-prior NON-ambiguous surface present in the
-    corpus (deterministic tiebreak on sid)."""
-    ents = (
-        cands.join(amb, "sid", "left_semi").select("entity_id").distinct()
-    )
-    unambiguous = cands.join(amb, "sid", "left_anti")
-    w = Window.partitionBy("entity_id").orderBy(F.desc("prior"), F.asc("sid"))
-    return (
-        unambiguous.join(ents, "entity_id", "left_semi")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("entity_id", F.col("sid").alias("rep_sid"))
-    )
+def ambiguous_surfaces(reps: DataFrame) -> DataFrame:
+    """Surfaces whose candidate set spans >1 entity: (sid), from the
+    rows of ``entity_rep_surfaces``."""
+    return reps.filter(F.col("ambiguous")).select("sid").distinct()
 
 
 def second_pass_overrides(
@@ -68,21 +64,24 @@ def second_pass_overrides(
     surface_clusters: DataFrame,
     cfg: ERConfig = ERConfig(),
     n_edges: int | None = None,
+    reps: DataFrame | None = None,
 ) -> DataFrame:
     """(mention_id, cluster_id) overrides for mentions of ambiguous
     surfaces. Mentions with no resolvable signal (no confident
     co-mentions in the conversation, or no representative signature
     overlap) are left out — callers coalesce with the first-pass
-    assignment. ``n_edges`` lets the caller reuse an already-computed
-    edge count (the strategy probe is otherwise one more serial job)."""
+    assignment. ``n_edges`` and ``reps`` (``entity_rep_surfaces`` of
+    ``cands``) let the caller reuse what it already computed; each is
+    computed here when absent."""
     key_col = "canon_norm" if "canon_norm" in mentions.columns else "surface_norm"
     m = mentions.select(
         "mention_id",
         "conv_id",
         F.xxhash64(F.col(key_col)).alias("sid"),
     )
-    amb = ambiguous_surfaces(cands)
-    if amb.isEmpty():
+    if reps is None:
+        reps = entity_rep_surfaces(cands)
+    if reps.filter(F.col("ambiguous")).isEmpty():
         # no surface has >1 candidate entity: decide from the
         # DICTIONARY alone, before any corpus-sized work — the
         # amb_mentions probe below would join the full mentions table
@@ -92,8 +91,8 @@ def second_pass_overrides(
             [], "mention_id long, cluster_id long"
         )
 
+    amb = ambiguous_surfaces(reps)
     amb_mentions = m.join(amb, "sid", "left_semi").persist()
-    reps = None
     try:
         if amb_mentions.isEmpty():
             # ambiguous dictionary rows exist but none occur in the
@@ -102,9 +101,8 @@ def second_pass_overrides(
             return amb_mentions.sparkSession.createDataFrame(
                 [], "mention_id long, cluster_id long"
             )
-        reps = entity_rep_surfaces(cands, amb).persist()
         out = _second_pass_body(
-            m, amb, amb_mentions, reps, cands, edges, surface_clusters, cfg,
+            m, amb, amb_mentions, reps, edges, surface_clusters, cfg,
             n_edges=n_edges,
         )
         # materialize the (tiny — one row per re-pointed mention)
@@ -116,8 +114,6 @@ def second_pass_overrides(
         return out
     finally:
         amb_mentions.unpersist()
-        if reps is not None:
-            reps.unpersist()
 
 
 def _second_pass_best_local(spark, edges, pref_tbl, trial_tbl, cfg):
@@ -178,7 +174,7 @@ def _second_pass_best_local(spark, edges, pref_tbl, trial_tbl, cfg):
 
 
 def _second_pass_body(
-    m, amb, amb_mentions, reps, cands, edges, surface_clusters, cfg, n_edges=None
+    m, amb, amb_mentions, reps, edges, surface_clusters, cfg, n_edges=None
 ):
     # conversations that need a signature
     convs = amb_mentions.select("conv_id").distinct()
@@ -194,11 +190,14 @@ def _second_pass_body(
     )
 
     # candidate (conversation, entity-rep) pairs per ambiguous mention
+    # (a candidate repeats once per source of its alias; distinct folds them)
     trial = (
         amb_mentions.join(
-            cands.join(amb, "sid", "left_semi").select("sid", "entity_id"), "sid"
+            reps.filter(F.col("ambiguous") & F.col("rep_sid").isNotNull()).select(
+                "sid", "entity_id", "rep_sid"
+            ),
+            "sid",
         )
-        .join(reps, "entity_id")
         .select("conv_id", "sid", "entity_id", "rep_sid")
         .distinct()
         .withColumn("seed_a", F.xxhash64("conv_id"))
@@ -232,7 +231,7 @@ def _second_pass_body(
         # ONE batched PPR over the conversation preference vectors and
         # the representative indicator seeds: one transition-matrix
         # build (one CSR collect below the size gate) serves both
-        rep_seeds = reps.select(F.col("rep_sid").alias("seed")).distinct()
+        rep_seeds = trial.select(F.col("rep_sid").alias("seed")).distinct()
         sigs = ppr.personalized_pagerank_auto(
             preference.union(ppr.indicator_preference(rep_seeds)), edges, cfg,
             n_edges=n_edges,

@@ -1,11 +1,13 @@
-"""Evaluation: pairwise precision / recall / F1 (A8).
+"""Evaluation (A8): pairwise precision / recall / F1 of a clustering,
+per-document macro accuracy, and N4 gold-offset reconciliation.
 
-The reference's harness computes micro/macro mention-accuracy against
-gold XML (``experiment/Evaluation.java:57-161``); per BASELINE.json the
-rebuild evaluates PAIRWISE over labeled pairs at the fixed blocking
-key: predicted-match = same predicted cluster; gold-match = same gold
-entity. Micro counts, same correct/found/query arithmetic as
-``Evaluation.java:154-160`` recast to TP/FP/FN.
+The reference's harness scores every gold mention against gold XML
+(``experiment/Evaluation.java:57-161``). ``contingency_prf`` does the
+same for a clustering: over ALL gold mention pairs, predicted-match =
+same cluster and gold-match = same gold entity, micro-counted as
+TP/FP/FN (``Evaluation.java:154-160``'s correct/found/query arithmetic).
+It counts from the cluster x entity contingency table, so it is linear
+in the number of mentions and sees splits and merges across blocks.
 """
 
 from __future__ import annotations
@@ -59,22 +61,6 @@ def reconcile_gold_offsets(mentions: DataFrame, gold_mentions: DataFrame) -> Dat
     return exact.union(fallback)
 
 
-def label_pairs(pairs: DataFrame, gold_mentions_keyed: DataFrame) -> DataFrame:
-    """pairs(left_id, right_id) ⋈ gold entity per side →
-    + is_match column (F5). gold_mentions_keyed: (mention_id, entity_id)."""
-    gl = gold_mentions_keyed.select(
-        F.col("mention_id").alias("left_id"), F.col("entity_id").alias("ent_l")
-    )
-    gr = gold_mentions_keyed.select(
-        F.col("mention_id").alias("right_id"), F.col("entity_id").alias("ent_r")
-    )
-    return (
-        pairs.join(gl, "left_id")
-        .join(gr, "right_id")
-        .withColumn("is_match", F.col("ent_l") == F.col("ent_r"))
-    )
-
-
 def macro_accuracy(
     labeled: DataFrame,
     group_col: str = "conv_id",
@@ -109,15 +95,49 @@ def macro_accuracy(
     return per.crossJoin(F.broadcast(macro))
 
 
-def pairwise_prf(labeled: DataFrame, predicted_col: str = "predicted") -> dict:
-    """labeled(is_match, <predicted_col>) → {precision, recall, f1, tp, fp, fn}."""
-    row = labeled.agg(
-        F.sum(F.when(F.col(predicted_col) & F.col("is_match"), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col(predicted_col) & ~F.col("is_match"), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~F.col(predicted_col) & F.col("is_match"), 1).otherwise(0)).alias("fn"),
-    ).first()
-    tp, fp, fn = row["tp"] or 0, row["fp"] or 0, row["fn"] or 0
-    p = tp / (tp + fp) if tp + fp else 0.0
-    r = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
-    return {"precision": p, "recall": r, "f1": f1, "tp": tp, "fp": fp, "fn": fn}
+def contingency_prf(clusters: DataFrame, gold_mentions: DataFrame) -> dict:
+    """Pairwise P/R/F1 of ``clusters(mention_id, cluster_id)`` against
+    ``gold_mentions(conv_id, turn_idx, start, entity_id)``, over every
+    gold mention pair.
+
+    Gold is keyed ``xxhash64(conv_id, turn_idx, start)``, the id
+    ``extract_mentions`` gives a mention. With n_ij the gold mentions of
+    cluster i and entity j, tp = sum C(n_ij, 2); predicted pairs and
+    gold pairs are the same sum over the cluster and the entity totals.
+    One ``cube`` over (cluster, entity) yields all three in one action.
+    A gold mention with no cluster is a singleton and counts in
+    ``missing``. Returns {precision, recall, f1, tp, fp, fn, missing},
+    with fp = predicted pairs - tp and fn = gold pairs - tp."""
+    gold = gold_mentions.select(
+        F.xxhash64("conv_id", "turn_idx", "start").alias("mention_id"), "entity_id"
+    ).distinct()
+    cells = gold.join(clusters.select("mention_id", "cluster_id"), "mention_id", "left").select(
+        # a missing mention is a cluster of its own
+        F.struct("cluster_id", F.when(F.col("cluster_id").isNull(), F.col("mention_id"))).alias("cluster"),
+        "entity_id",
+    )
+    # grouping id 0: (cluster, entity) cells; 1: clusters; 2: entities;
+    # a rolled-up cluster reads null, so only the cells count ``missing``
+    by_g = {
+        r["g"]: r
+        for r in cells.cube("cluster", "entity_id")
+        .agg(F.grouping_id().alias("g"), F.count("*").alias("n"))
+        .groupBy("g")
+        .agg(
+            F.sum(F.expr("n * (n - 1) div 2")).alias("pairs"),
+            F.sum(F.when(F.col("cluster.cluster_id").isNull(), F.col("n"))).alias("missing"),
+        )
+        .collect()
+    }
+    tp, pred, true = (by_g[g]["pairs"] if g in by_g else 0 for g in (0, 1, 2))
+    p = tp / pred if pred else 1.0
+    r = tp / true if true else 1.0
+    return {
+        "precision": p,
+        "recall": r,
+        "f1": 2 * p * r / (p + r) if p + r else 0.0,
+        "tp": tp,
+        "fp": pred - tp,
+        "fn": true - tp,
+        "missing": (by_g[0]["missing"] or 0) if 0 in by_g else 0,
+    }

@@ -12,7 +12,7 @@ Stage graph (each stage a committed snapshot, resumable):
                           │                │               │
                  surface-pair features (string ⊕ sig ⊕ prior)
                           │
-               score → gate → match edges (surface graph)
+               score → gate → match edges ∪ dictionary edges (surface graph)
                           │
                connected components → surface clusters
                           │
@@ -48,8 +48,7 @@ from pyspark.sql import functions as F
 
 from wned_spark.config import ERConfig
 from wned_spark.functions.similarity import sparse_vectors
-from wned_spark.operators import blocking, candidates as cand_ops, cc, graph, mentions as mention_ops, ppr, scoring
-from wned_spark.operators.evaluate import label_pairs, pairwise_prf
+from wned_spark.operators import blocking, candidates as cand_ops, cc, disambig, graph, mentions as mention_ops, ppr, scoring
 from wned_spark.plans.catalog import Catalog
 
 
@@ -60,7 +59,6 @@ class PipelineResult:
     scored: DataFrame       # surface pairs + features + score
     surface_clusters: DataFrame
     clusters: DataFrame     # mention-level assignment
-    metrics: dict
 
 
 def run_er_pipeline(
@@ -70,7 +68,6 @@ def run_er_pipeline(
     cfg: ERConfig = ERConfig(),
     catalog: Catalog | None = None,
     use_signatures: bool = True,
-    gold_mentions: DataFrame | None = None,
     ranker=None,
     nil_model=None,
 ) -> PipelineResult:
@@ -79,9 +76,10 @@ def run_er_pipeline(
 
     ``use_signatures=False`` is an ablation (no PPR signature features),
     not a supported configuration: the PPR features carry the precision.
-    On perfbench's ``er_small`` corpus it scores blocked F1 0.986
-    (precision 0.973, recall 1.0), below the 0.99 gate the default
-    configuration passes."""
+    On perfbench's ``er_small`` corpus, over every gold mention pair
+    (``evaluate.contingency_prf``), it scores F1 0.965 (precision 0.932,
+    16,558 false-positive pairs; recall 1.0), below the 0.99 gate the
+    default configuration passes at 1.0."""
 
     @contextmanager
     def described(name: str):
@@ -407,6 +405,20 @@ def run_er_pipeline(
         else:
             scored = stage("scored_pairs", lambda: scoring.combine_scores(survivors, cfg))
 
+        # ---- dictionary edges (J1): link what the alias dictionary links ----
+        # a surface whose candidate set is exactly ONE entity, with prior
+        # >= prior_gate, joins that entity's representative surface (its
+        # max-prior non-ambiguous surface) — the reference links a mention
+        # by exact alias lookup with no string-similarity precondition
+        # (CandidateSelectionLucene.java:90-117), so an acronym or a
+        # nickname sharing no block key with its entity's other surfaces
+        # still links. Surfaces with several candidates are left to the
+        # second pass: one such edge per candidate would chain the
+        # entities together under connected components. The flagged
+        # candidate rows are dictionary-sized and shared with the second
+        # pass; no cache, which would add a job per consumer.
+        reps = disambig.entity_rep_surfaces(cands) if alias_raw is not None else None
+
         # ---- match edges → connected components on the surface graph (G8) ----
         def _surface_clusters():
             # (the cascade admitted each pair via name_soft OR
@@ -424,6 +436,11 @@ def run_er_pipeline(
             edges_m = kept.select(
                 F.col("left_sid").alias("u"), F.col("right_sid").alias("v")
             )
+            if reps is not None:
+                edges_m = edges_m.union(
+                    reps.filter(~F.col("ambiguous") & (F.col("prior") >= cfg.prior_gate))
+                    .select(F.col("sid").alias("u"), F.col("rep_sid").alias("v"))
+                )
             comp = cc.connected_components_auto(edges_m, cfg.cc_max_iter)
             return (
                 surfaces.select(F.col("sid").alias("node"), "sn")
@@ -444,12 +461,11 @@ def run_er_pipeline(
         # ambiguous slice only — see operators/disambig.py.
         overrides = None
         if use_signatures and alias_raw is not None and cfg.use_second_pass:
-            from wned_spark.operators import disambig
-
             overrides = stage(
                 "ambiguity_overrides",
                 lambda: disambig.second_pass_overrides(
-                    mentions, cands, edges, surface_clusters, cfg, n_edges=n_edges
+                    mentions, cands, edges, surface_clusters, cfg,
+                    n_edges=n_edges, reps=reps,
                 ),
             )
 
@@ -482,30 +498,12 @@ def run_er_pipeline(
 
         clusters = stage("clusters", _clusters)
 
-        # ---- evaluation (test harness only — quadratic mention pairs) ----
-        metrics: dict = {}
-        if gold_mentions is not None:
-            mention_pairs = blocking.candidate_pairs(mentions, cfg)
-            gold_keyed = gold_mentions.select(
-                F.xxhash64("conv_id", "turn_idx", "start").alias("mention_id"), "entity_id"
-            )
-            labeled = label_pairs(mention_pairs.select("left_id", "right_id"), gold_keyed)
-            cl_ = clusters.select(F.col("mention_id").alias("left_id"), F.col("cluster_id").alias("cl_l"))
-            cr_ = clusters.select(F.col("mention_id").alias("right_id"), F.col("cluster_id").alias("cl_r"))
-            labeled = (
-                labeled.join(cl_, "left_id")
-                .join(cr_, "right_id")
-                .withColumn("predicted", F.col("cl_l") == F.col("cl_r"))
-            )
-            metrics = pairwise_prf(labeled)
-
         return PipelineResult(
             mentions=mentions,
             pairs=pairs,
             scored=scored,
             surface_clusters=surface_clusters,
             clusters=clusters,
-            metrics=metrics,
         )
     finally:
         if _pool is not None:
